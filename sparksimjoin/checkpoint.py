@@ -30,6 +30,13 @@ stage name, total rows, per-file (per-partition) row counts, wall
 time, and the input stage names — the lineage chain the north rule
 asks for. Idempotent re-entry: ``get_or_compute`` skips completed
 stages, which is the resume path after a mid-run kill.
+
+Parquet manifests also carry the written frame's full schema
+(``schema_json``, ``StructType.json()``), and row counts come from
+the parquet footers, so neither ``write`` nor ``read`` launches a
+Spark job beyond the data write itself: both open the stage with that
+explicit schema instead of a parquet schema-inference job. Manifests
+written before ``schema_json`` existed are read with inference.
 """
 
 from __future__ import annotations
@@ -42,6 +49,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST = "_MANIFEST.json"
 
@@ -168,7 +176,11 @@ class CheckpointManager:
         assert self.exists(name), f"stage {name!r} not checkpointed"
         if self.fmt == "iceberg":
             return self.cat.read_table(self.root, name)
-        return self.spark.read.parquet(self._dir(name))
+        schema_json = self.manifest(name).get("schema_json")
+        reader = self.spark.read
+        if schema_json is not None:
+            reader = reader.schema(StructType.fromJson(json.loads(schema_json)))
+        return reader.parquet(self._dir(name))
 
     def manifest(self, name: str) -> dict:
         if self.fmt == "iceberg":
@@ -224,7 +236,9 @@ class CheckpointManager:
             # manifest pointing at missing data
             written = self.cat.replace_table(self.root, name, df)
             per_file = self._partition_counts(written)
-            manifest = self._build_manifest(name, per_file, inputs, extra, t0, written)
+            manifest = self._build_manifest(
+                name, per_file, inputs, extra, t0, written.schema
+            )
             self.cat.upsert_manifest(
                 self.root, name, json.dumps(manifest, sort_keys=True)
             )
@@ -234,22 +248,23 @@ class CheckpointManager:
         shutil.rmtree(tmp, ignore_errors=True)
         shutil.rmtree(final, ignore_errors=True)
         df.write.mode("overwrite").parquet(tmp)
-        written = self.spark.read.parquet(tmp)
+        schema = df.schema
         per_file = self._partition_counts_from_footers(tmp)
-        manifest = self._build_manifest(name, per_file, inputs, extra, t0, written)
+        manifest = self._build_manifest(name, per_file, inputs, extra, t0, schema)
+        manifest["schema_json"] = schema.json()
         with open(os.path.join(tmp, MANIFEST), "w") as f:
             json.dump(manifest, f, indent=1, sort_keys=True)
         os.rename(tmp, final)
-        return self.spark.read.parquet(final)
+        return self.spark.read.schema(schema).parquet(final)
 
-    def _build_manifest(self, name, per_file, inputs, extra, t0, written) -> dict:
+    def _build_manifest(self, name, per_file, inputs, extra, t0, schema) -> dict:
         manifest = {
             "stage": name,
             "rows": int(sum(per_file.values())),
             "partitions": per_file,
             "inputs": inputs or [],
             "wall_time_sec": round(time.time() - t0, 3),
-            "schema": written.schema.simpleString(),
+            "schema": schema.simpleString(),
         }
         # callable extras are resolved HERE, after the stage's write
         # action has run — lets stages report Observation-collected

@@ -10,8 +10,10 @@
        resume point after a kill)
     S2 candidates: prefix-blocked salted token join
     S3 scored: exact set-sim verify, threshold filter
-    S4 clusters: large-star/small-star connected components with
-       per-round checkpoints; singletons keep their own conv_id
+    S4 clusters: connected components (clustering.py): driver-side
+       union-find for small edge sets, else large-star/small-star
+       rounds (durable per-round checkpoints only with
+       cc_round_artifacts); singletons keep their own conv_id
 
 Every stage is checkpointed through CheckpointManager with
 per-partition counters + lineage, and re-entry skips completed stages
@@ -102,11 +104,13 @@ class PipelineConfig:
     # durable per-round CC checkpoints (cc_round_N stages). OFF by
     # default: resume NEVER read them back (a kill mid-CC resumes
     # from `scored` and redoes the contraction — the rounds were
-    # write-only cost, one parquet write + read-back + manifest per
-    # round), and lineage truncation — their in-plan function — is
-    # served by localCheckpoint exactly as connected_components does
-    # without a hook. Turn on to keep the per-round edge sets as
-    # debugging artifacts.
+    # write-only cost, one parquet write + manifest per round), and
+    # lineage truncation — their in-plan function — is served by
+    # localCheckpoint exactly as connected_components does without a
+    # hook. Turn on to keep the per-round edge sets as debugging
+    # artifacts; this always takes the distributed star rounds, even
+    # for edge sets small enough for the driver-side path
+    # (clustering.LOCAL_CC_EDGE_CAP).
     cc_round_artifacts: bool = False
     # also checkpoint an `audit` stage (audit.cluster_audit over the
     # scored edges + final clusters): per-component size / edge

@@ -172,6 +172,33 @@ def test_dense_vs_blocked_weighted_jaccard(spark):
     assert len(got_dense) > 0
 
 
+def test_dense_gate_row_cap(spark, monkeypatch):
+    """The row-cap branch of the dense gate, on both sides: the dense
+    corpus's meeting volume reaches n_l*n_r, yet the gate declines the
+    dense path once max(n_l, n_r) exceeds DENSE_ALLPAIRS_CAP."""
+    import sparksimjoin.joins.core as core
+    from sparksimjoin.joins.core import (
+        prefix_explode,
+        prefix_meeting_estimate,
+        prepare_sides,
+    )
+
+    corpus = _dense_corpus(spark)
+    prep, _, _ = prepare_sides(corpus, corpus, "id", "id", "text", "text",
+                               WS.with_return_set(True))
+    ex = prefix_explode(prep, "l", "JACCARD", 0.5)
+    n = prep.count()
+    assert prefix_meeting_estimate(ex, ex, same=True) >= n * n
+
+    for cap, dense in ((n, True), (n - 1, False)):
+        monkeypatch.setattr(core, "DENSE_ALLPAIRS_CAP", cap)
+        out = jaccard_join(corpus, corpus, "id", "id", "text", "text", WS,
+                           0.5, self_join=True, dedup_strings=False,
+                           allow_empty=False)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert ("BroadcastNestedLoopJoin" in plan) == dense, cap
+
+
 def test_dense_gate_marginal_window(spark):
     """The priced marginal window (joins/core.DENSE_MEET_COST_RATIO):
     below est >= n^2 but above est*FACTOR >= n^2 the gate charges the
