@@ -728,6 +728,106 @@ def dense_band_pair_stats(
     return int(bp_row[0] or 0), float(lbar)
 
 
+def plan_candidates(
+    rec_l: DataFrame,
+    rec_r: DataFrame,
+    ex_l: DataFrame,
+    ex_r: DataFrame,
+    *,
+    same: bool,
+    allow_dense: bool = True,
+    band_stats=None,
+    budget: int | None = None,
+) -> tuple[bool, dict]:
+    """The candidate-path decision of every prefix-blocked join: dense
+    all-pairs (:func:`dense_pairs`) or blocked (:func:`blocked_pairs`).
+    -> (use_dense, stats), stats = {path, n_l, n_r, est, bp, lbar,
+    cap}, None for anything not computed.
+
+    ``rec_l``/``rec_r`` are the record frames (one row per record),
+    ``ex_l``/``ex_r`` the exploded prefixes the blocked join would
+    meet on; ``same`` marks a self-join (one count, squared probe).
+    The rule, with constants and calibration anchors at
+    :data:`DENSE_ALLPAIRS_CAP` and :data:`DENSE_MEET_COST_RATIO`:
+
+    - both sides counted; past the row cap the join stays blocked;
+    - dense iff the exact meeting volume ``est`` (one
+      :func:`prefix_meeting_estimate`) reaches ``n_l * n_r``;
+    - in the marginal window ``est * DENSE_MEETING_FACTOR >= n_l *
+      n_r`` the dense path's verify volume is priced, but only when
+      the caller passes ``band_stats``, a thunk returning
+      :func:`dense_band_pair_stats`. The set-sim joins do. TF-IDF
+      cosine is scale-invariant, so it has no band to prune the dense
+      product: its verify volume IS ``n_l * n_r``, which the window
+      rule would admit only past ``est >= n^2 * L / RATIO`` — stricter
+      than the unconditional gate at realistic token counts. The
+      weighted joins prune on total weight, whose histogram is
+      corpus-sized rather than record-length-sized. Neither passes a
+      thunk, and their bench corpora sit far inside the unconditional
+      gate anyway (est/n^2 = 5.2 tfidf, 3.1 weighted).
+
+    ``allow_dense=False`` skips the gate and its jobs entirely: a
+    LOSSY ``stop_token_cap`` (whose candidate drop is part of the
+    declared semantics) and non-monotone comp_ops (the blocked
+    candidate set IS the semantics there — verify keeps low scores).
+
+    ``budget`` (``candidate_budget``): the pre-flight guard against a
+    runaway blocked join. ``est`` is computed before anything
+    pairwise runs, and a breach raises ValueError with the projected
+    volume; the gate then reuses the same ``est``."""
+    n_l = n_r = est = bp = lbar = None
+    use_dense = False
+    if budget is not None:
+        if budget <= 0:
+            raise ValueError(f"candidate_budget must be > 0, got {budget}")
+        est = prefix_meeting_estimate(ex_l, ex_r, same=same)
+        if est > budget:
+            raise ValueError(
+                f"projected candidate meeting volume {est:,} exceeds "
+                f"candidate_budget {budget:,}. Price a lossy stop-token cap "
+                "first: estimate_join_cost(..., stop_token_cap=N) reports the "
+                "exact capped volume, a sound lost-pair upper bound, and the "
+                "blind-record count (the cap_advisor workflow); then pass "
+                "stop_token_cap=N here, pre-filter boilerplate tokens "
+                "upstream, or raise the budget."
+            )
+    if allow_dense:
+        n_l = rec_l.count()
+        n_r = n_l if same else rec_r.count()
+        if 0 < max(n_l, n_r) <= DENSE_ALLPAIRS_CAP:
+            if est is None:
+                est = prefix_meeting_estimate(ex_l, ex_r, same=same)
+            use_dense = est >= n_l * n_r
+            if (not use_dense and band_stats is not None
+                    and est * DENSE_MEETING_FACTOR >= n_l * n_r):
+                bp, lbar = band_stats()
+                use_dense = bp * lbar <= DENSE_MEET_COST_RATIO * est
+    return use_dense, {
+        "path": "dense" if use_dense else "blocked", "n_l": n_l, "n_r": n_r,
+        "est": est, "bp": bp, "lbar": lbar, "cap": DENSE_ALLPAIRS_CAP,
+    }
+
+
+def dense_pairs(l: DataFrame, r: DataFrame, cond: Column) -> DataFrame:
+    """All-pairs candidates: broadcast nested-loop of ``l`` (carrying
+    ``l_id``) against the row-capped ``r`` (carrying ``r_id``) on
+    ``cond`` -> (l_id, r_id), no exchange past the one below.
+
+    The streamed (left) side is explicitly hash-repartitioned to the
+    session parallelism: it comes off a cached record frame whose
+    terminal aggregation AQE coalesces to 1-2 partitions (the frame is
+    tiny), and BNL parallelism == streamed-side partitions — so the
+    whole fused candidate+verify stage would otherwise run serially
+    (measured: a 1-task 38 exec-s stage on the weighted join; 32 tasks
+    after). One exchange of the row-capped (<= DENSE_ALLPAIRS_CAP)
+    frame buys full parallelism for the n_l*n_r-cell loop."""
+    n_part = int(l.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return (
+        l.repartition(n_part, "l_id").join(F.broadcast(r), cond)
+        .select("l_id", "r_id")
+    )
+
+
 def dense_candidates(
     prep_l: DataFrame,
     prep_r: DataFrame,
@@ -746,20 +846,10 @@ def dense_candidates(
     sound, so qualifying pairs survive both), and exact verification
     maps both sets to the identical result. Records with empty token
     sets are excluded exactly as the prefix explode excludes them
-    (the ``allow_empty`` branch alone emits empty-empty pairs).
-
-    The streamed (left) side is explicitly hash-repartitioned to the
-    session parallelism: it comes off a cached record frame whose
-    terminal aggregation AQE coalesces to 1-2 partitions (the frame is
-    tiny), and BNL parallelism == streamed-side partitions — so the
-    whole fused candidate+verify stage would otherwise run serially
-    (measured: a 1-task 38 exec-s stage on the weighted twin of this
-    path). One exchange of the row-capped (<= DENSE_ALLPAIRS_CAP)
-    frame buys full parallelism for the n_l*n_r-cell loop."""
-    n_part = int(prep_l.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    (the ``allow_empty`` branch alone emits empty-empty pairs)."""
     l = prep_l.where(F.col("size") > 0).select(
         F.col("iid").alias("l_id"), F.col("size").alias("l_size")
-    ).repartition(n_part, "l_id")
+    )
     r = prep_r.where(F.col("size") > 0).select(
         F.col("iid").alias("r_id"), F.col("size").alias("r_size")
     )
@@ -767,7 +857,7 @@ def dense_candidates(
     cond = F.col("r_size").between(lo, hi)
     if self_join:
         cond = cond & (F.col("l_id") < F.col("r_id"))
-    return l.join(F.broadcast(r), cond, "inner").select("l_id", "r_id")
+    return dense_pairs(l, r, cond)
 
 
 # default hot-token split threshold: an unsplit join cell is at most
@@ -841,37 +931,41 @@ def apply_salt(
     return ex_l, ex_r, ["token", "salt"]
 
 
-def resolve_position_mode(measure: str, threshold: float) -> str:
-    """Choose between the occurrence-level and accumulated (PPJoin)
-    position bounds. Default: OCCURRENCE for every measure.
+def blocked_pairs(
+    ex_l: DataFrame, ex_r: DataFrame, salt_map: DataFrame | None, cond: Column
+) -> DataFrame:
+    """The salted, pinned blocked candidate join: equi-join the exploded
+    prefixes on token (+ salt, :func:`apply_salt`), keep rows passing
+    ``cond``, project distinct (l_id, r_id).
 
-    History, because this flag has now flipped twice and only the
-    quiet-host measurement should be trusted: a mid-round-4 A/B taken
-    in a heavily contended window (identical cells spread 6x;
-    BENCH/BASELINE.md 09:57 entry) concluded aggregate wins at every
-    threshold and flipped the default. Re-measured on a quiet host
-    (full pipeline, 24k transcripts, fresh JVM per cell, BENCH/
-    BASELINE.md round-4 retraction entry) the conclusion inverted at
-    BOTH thresholds and BOTH core counts: occurrence 297s vs
-    aggregate 665s at t=0.6/8 cores, 51s vs 192s at t=0.8/8 cores,
-    with the same shape at 32 cores. The aggregate mode's tighter
-    bound does cut candidates (40.2M->23.2M at t=0.6) but its
-    pair-grouping shuffle of the full meeting stream inside the
-    candidates stage (573s vs 161s at t=0.6; 116s vs 11s at t=0.8)
-    costs several times more than the verify-stage savings. The
-    documents corpus (31-word vocab, t=0.95) agreed: occurrence 8.9s
-    vs aggregate 11.8s min-of-3. Aggregate stays available via the
-    ``position_mode`` parameter (joins) / ``PipelineConfig.
-    position_mode`` for workloads whose verify step is far more
-    expensive per pair (e.g. long arrays, costly user scorers).
+    The join inputs are explicitly repartitioned to the session
+    parallelism: exploded prefix rows are NARROW (tens of bytes), so
+    AQE's byte-based coalescing collapses the planner-inserted join
+    exchanges to a handful of tasks — and the join's OUTPUT expansion
+    (posting-list × posting-list, often 10x+ the input bytes) plus the
+    residual predicates and map-side pair dedup then run nearly
+    serially. An explicit numbered repartition on the join keys is
+    reused by EnsureRequirements and is exempt from AQE coalescing
+    (REPARTITION_BY_NUM), keeping the expansion at full parallelism —
+    observed as the candidates stage pinning at ~45s regardless of
+    8 vs 32 cores before this; on the tfidf bench query a 2-task
+    27 exec-s candidate stage was ~13 s of its 22 s, and on the
+    weighted one a 1-task 12.6 exec-s stage was ~12 s of its 15 s.
 
-    EDIT_DISTANCE must stay on occurrence for SOUNDNESS regardless:
-    the accumulated bound assumes set semantics (one join row per
-    shared token) and edit distance is bag-tokenized. OVERLAP /
-    OVERLAP_COEFFICIENT likewise: their full/near-full prefixes would
-    make aggregate group the entire unfiltered inverted-index join
-    stream (measured GC meltdown on the 48k-row Zipf corpus)."""
-    return "occurrence"
+    distinct() keeps its planner shape: the partial (map-side) dedup
+    runs inside the join stage at the parallelism fixed above, and
+    the final agg over already-deduped pairs is cheap even when AQE
+    coalesces it; CPU-heavy consumers (verify, levenshtein) re-spread
+    explicitly on the pair key themselves."""
+    n_part = int(ex_l.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    ex_l, ex_r, join_keys = apply_salt(ex_l, ex_r, salt_map)
+    return (
+        ex_l.repartition(n_part, *join_keys)
+        .join(ex_r.repartition(n_part, *join_keys), join_keys)
+        .where(cond)
+        .select("l_id", "r_id")
+        .distinct()
+    )
 
 
 def candidate_pairs(
@@ -884,66 +978,17 @@ def candidate_pairs(
     salt_map: DataFrame | None = None,
     extra_predicate: Column | None = None,
     position_filter: bool = True,
-    position_mode: str = "occurrence",
 ) -> DataFrame:
-    """Equi-join the exploded prefixes on token (+ optional salt),
-    apply size-bound and position-bound residual predicates, and
-    project distinct (l_id, r_id).
-
-    The join inputs are explicitly repartitioned to the session
-    parallelism: exploded prefix rows are NARROW (tens of bytes), so
-    AQE's byte-based coalescing collapses the planner-inserted join
-    exchanges to a handful of tasks — and the join's OUTPUT expansion
-    (posting-list × posting-list, often 10x+ the input bytes) plus the
-    residual predicates and map-side pair dedup then run nearly
-    serially. An explicit numbered repartition on the join keys is
-    reused by EnsureRequirements and is exempt from AQE coalescing
-    (REPARTITION_BY_NUM), keeping the expansion at full parallelism —
-    observed as the candidates stage pinning at ~45s regardless of
-    8 vs 32 cores before this.
-
-    ``position_mode`` selects how the PPJoin position bound is applied:
-
-    - ``"occurrence"`` (filters' documented semantics): a pair
-      survives if ANY shared prefix-token occurrence satisfies
-      ``1 + min(s1 - lpos, s2 - rpos) >= req``; pairs are then
-      ``distinct()``-ed.
-    - ``"aggregate"`` (the joins' candidate path): the shared
-      prefix-token occurrences of each pair are accumulated —
-      ``o_p = |shared prefix tokens|`` with the min/max matching
-      positions — and the pair survives only if BOTH upper bounds on
-      the total overlap reach ``req``::
-
-          o_p + min(s1 - lp_max, s2 - rp_max) >= req
-          1   + min(s1 - lp_min, s2 - rp_min) >= req
-
-      Losslessness: both token arrays are sorted in the same global
-      order, so the shared prefix tokens appear in the same relative
-      order on both sides (max/min positions belong to the same
-      token), and any common token ranked below the last shared
-      prefix token necessarily lies inside BOTH prefixes (hence is
-      counted in o_p); tokens above it number at most
-      ``min(s1 - lp_max, s2 - rp_max)``. Set-semantics only (each
-      shared token contributes exactly one join row) — bag-tokenized
-      edit distance stays on ``"occurrence"``.
-
-      This is the classic PPJoin accumulated bound and it is the big
-      candidate-volume lever: on the 2,000-word transcripts workload
-      the occurrence bound passes ~9.7M pairs into exact verification
-      of which only ~3.8k survive; the accumulated bound removes most
-      of that gap before the expensive stage.
-    """
-    spark = ex_l.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert position_mode in ("occurrence", "aggregate"), position_mode
-    ex_l, ex_r, join_keys = apply_salt(ex_l, ex_r, salt_map)
-    ex_l = ex_l.repartition(n_part, *join_keys)
-    ex_r = ex_r.repartition(n_part, *join_keys)
-
+    """Blocked candidates of a prefix-filtered join
+    (:func:`blocked_pairs`) with the size-bound and PPJoin position-
+    bound residual predicates. The position bound is the occurrence-
+    level one (filters' documented semantics): a pair survives if ANY
+    shared prefix-token occurrence satisfies
+    ``1 + min(s1 - lpos, s2 - rpos) >= req``. Sound for bag-tokenized
+    edit distance too (no set-semantics assumption)."""
     lo, hi = size_bounds_expr(F.col("l_size"), measure, threshold)
     cond = F.col("r_size").between(lo, hi)
-    use_agg = position_filter and position_mode == "aggregate"
-    if position_filter and not use_agg:
+    if position_filter:
         req = overlap_threshold_expr(F.col("l_size"), F.col("r_size"), measure, threshold, qval)
         bound = 1 + F.least(
             F.col("l_size") - F.col("l_pos"), F.col("r_size") - F.col("r_pos")
@@ -953,34 +998,7 @@ def candidate_pairs(
         cond = cond & (F.col("l_id") < F.col("r_id"))
     if extra_predicate is not None:
         cond = cond & extra_predicate
-    joined = ex_l.join(ex_r, join_keys).where(cond)
-    if use_agg:
-        agg = joined.groupBy("l_id", "r_id").agg(
-            F.count(F.lit(1)).alias("_op"),
-            F.min("l_pos").alias("_lpmin"),
-            F.min("r_pos").alias("_rpmin"),
-            F.max("l_pos").alias("_lpmax"),
-            F.max("r_pos").alias("_rpmax"),
-            F.max("l_size").alias("_s1"),
-            F.max("r_size").alias("_s2"),
-        )
-        req = overlap_threshold_expr(F.col("_s1"), F.col("_s2"), measure, threshold, qval)
-        ub_last = F.col("_op") + F.least(
-            F.col("_s1") - F.col("_lpmax"), F.col("_s2") - F.col("_rpmax")
-        )
-        ub_first = 1 + F.least(
-            F.col("_s1") - F.col("_lpmin"), F.col("_s2") - F.col("_rpmin")
-        )
-        return (
-            agg.where((ub_last.cast("double") >= req) & (ub_first.cast("double") >= req))
-            .select("l_id", "r_id")
-        )
-    # distinct() keeps its planner shape: the partial (map-side) dedup
-    # runs inside the join stage at the parallelism fixed above, and
-    # the final agg over already-deduped pairs is cheap even when AQE
-    # coalesces it; CPU-heavy consumers (verify, levenshtein)
-    # re-spread explicitly on the pair key themselves
-    return joined.select("l_id", "r_id").distinct()
+    return blocked_pairs(ex_l, ex_r, salt_map, cond)
 
 
 def verify_pairs(

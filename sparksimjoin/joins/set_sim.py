@@ -35,15 +35,18 @@ from .core import (
     build_salt_map,
     candidate_pairs,
     canonical_set_key,
+    dense_band_pair_stats,
+    dense_candidates,
     diagonal_pairs,
     empty_pairs,
     expand_gid_pairs,
     missing_pairs,
+    plan_candidates,
     prefix_explode,
     prepare_sides,
     project_output,
     resolve_dedup,
-    resolve_position_mode,
+    resolve_salt_cap,
     string_dedup_maps,
     verify_pairs,
 )
@@ -74,7 +77,6 @@ def set_sim_join(
     salt_cap: int | None = None,
     dense_id: bool = False,
     position_filter: bool = True,
-    position_mode: str | None = None,
     dedup_strings: bool | str = "auto",
     stop_token_cap: int | None = None,
     candidate_budget: int | None = None,
@@ -100,7 +102,13 @@ def set_sim_join(
     before any pairwise work, and a breach raises ValueError carrying
     the projected volume plus the cap-advisor workflow
     (estimate_join_cost's stop_token_cap pricing) instead of
-    launching a runaway join. None (default) = off, no extra jobs.
+    launching a runaway join. None (default) = off. The dense-path
+    gate reuses the same probe, so a budget adds a job only when the
+    gate would not have probed.
+
+    ``metrics_out["candidate_plan"]`` records the candidate-path
+    decision (joins/core.plan_candidates): path, n_l, n_r, est, bp,
+    lbar and cap, None where not computed.
 
     ``_verify_score_fn`` / ``_verify_threshold`` (internal, used by
     joins/tversky.py): when set, ``measure``/``threshold`` drive ONLY
@@ -159,74 +167,24 @@ def set_sim_join(
             metrics_out["dropped_stop_tokens"] = LazyObservedMetric(
                 obs, "dropped_stop_tokens"
             )
-    # cost-based dense path (joins/core.DENSE_ALLPAIRS_CAP): when the
-    # EXACT meeting volume of the blocked equi-join (vocabulary-sized
-    # probe over the exploded prefixes) reaches n_l*n_r /
-    # DENSE_MEETING_FACTOR, all-pairs broadcast nested-loop beats the
-    # blocked join's own output (each meeting row costs more than a
-    # BNL predicate eval — factor rationale at the constant) and needs
-    # zero shuffles. Candidate sets differ
-    # (dense is a superset) but exact verification maps both to the
-    # identical result; disabled under the LOSSY stop_token_cap
-    # (whose candidate drop is part of the declared semantics) and for
-    # non-monotone comp_ops (the blocked candidate set IS the
-    # semantics there — verify keeps low scores).
-    from .core import (
-        DENSE_ALLPAIRS_CAP,
-        DENSE_MEET_COST_RATIO,
-        DENSE_MEETING_FACTOR,
-        dense_band_pair_stats,
-        dense_candidates,
-        prefix_meeting_estimate,
-        resolve_salt_cap,
-    )
-
-    # pre-flight candidate-volume guard (round-5 verdict item 4, the
-    # OVERLAP_COEFFICIENT quadratic-blow-up defense): when a budget is
-    # set, the EXACT meeting volume of the blocked candidate join is
-    # priced with the vocabulary-sized probe BEFORE anything pairwise
-    # runs, and a breach raises with the numbers instead of launching
-    # a runaway join. Off by default (None): the probe then only runs
-    # when the dense-path gate wants it.
-    if candidate_budget is not None:
-        if candidate_budget <= 0:
-            raise ValueError(f"candidate_budget must be > 0, got {candidate_budget}")
-        est_guard = prefix_meeting_estimate(ex_l, ex_r, same=prep_r is prep_l)
-        if est_guard > candidate_budget:
-            raise ValueError(
-                f"projected candidate meeting volume {est_guard:,} exceeds "
-                f"candidate_budget {candidate_budget:,} for measure {measure} "
-                f"at threshold {threshold}. Price a lossy stop-token cap "
-                "first: estimate_join_cost(..., stop_token_cap=N) reports the "
-                "exact capped volume, a sound lost-pair upper bound, and the "
-                "blind-record count (the cap_advisor workflow); then pass "
-                "stop_token_cap=N here, pre-filter boilerplate tokens "
-                "upstream, or raise the budget."
-            )
-
     # validate salt_cap up front, whichever candidate path runs: the
     # dense path never salts, but a nonsensical cap must still fail
     # loudly (the falsy-coercion contract test)
     resolved_salt_cap = resolve_salt_cap(salt_cap)
-
-    use_dense = False
-    if stop_token_cap is None and comp_op in (">=", ">"):
-        n_l = prep_l.count()
-        n_r = n_l if prep_r is prep_l else prep_r.count()
-        if 0 < max(n_l, n_r) <= DENSE_ALLPAIRS_CAP:
-            est = prefix_meeting_estimate(ex_l, ex_r, same=prep_r is prep_l)
-            use_dense = est >= n_l * n_r
-            if not use_dense and est * DENSE_MEETING_FACTOR >= n_l * n_r:
-                # marginal window (core.DENSE_MEET_COST_RATIO has the
-                # cost model + calibration anchors): price the dense
-                # path's full verify volume — exact size-band pair
-                # count x mean token count, two histogram-sized jobs —
-                # against the meeting rows the BNL saves
-                bp, lbar = dense_band_pair_stats(
-                    prep_l, prep_r, measure, threshold,
-                    same=prep_r is prep_l,
-                )
-                use_dense = bp * lbar <= DENSE_MEET_COST_RATIO * est
+    # dense all-pairs vs blocked (joins/core.plan_candidates). Dense is
+    # off under the LOSSY stop_token_cap and for non-monotone comp_ops;
+    # only the set-sims have the record-length size band whose pair
+    # volume prices the marginal window
+    same = prep_r is prep_l
+    use_dense, plan = plan_candidates(
+        prep_l, prep_r, ex_l, ex_r, same=same,
+        allow_dense=stop_token_cap is None and comp_op in (">=", ">"),
+        band_stats=lambda: dense_band_pair_stats(
+            prep_l, prep_r, measure, threshold, same=same),
+        budget=candidate_budget,
+    )
+    if metrics_out is not None:
+        metrics_out["candidate_plan"] = plan
     if use_dense:
         cand = dense_candidates(prep_l, prep_r, measure, threshold,
                                 self_join=self_join)
@@ -236,14 +194,9 @@ def set_sim_join(
         # hot blocking tokens must be split here (lossless,
         # property-tested); salt_cap overrides the threshold
         salt_map = build_salt_map(ranks, resolved_salt_cap)
-        # position-bound mode: occurrence by default — the accumulated
-        # bound's tighter candidate set never paid for its pair-grouping
-        # shuffle on any quiet-host measurement (resolve_position_mode
-        # docstring has the numbers and the contaminated-A/B history)
         cand = candidate_pairs(
             ex_l, ex_r, measure, threshold,
             self_join=self_join, salt_map=salt_map, position_filter=position_filter,
-            position_mode=position_mode or resolve_position_mode(measure, threshold),
         )
     # the candidate funnel above ran on dense-long iids (with_iid);
     # verify decodes back to original ids through its prep joins and

@@ -61,9 +61,13 @@ comparison is epsilon-widened — widening only adds candidates).
 Cosine is scale-invariant, so no norm band exists (unlike the
 set-weighted joins' W-band); the prefix is the whole filter.
 
-100 TB notes: candidates come from the salted int-tid equi-join
-(joins/core.build_salt_map — the same mandatory hot-token defense as
-every join here); verify is a JVM ``array_intersect`` + map-lookup
+Candidates come from the salted int-tid prefix equi-join
+(joins/core.blocked_pairs, with the same mandatory hot-token salt as
+every join here) or, when joins/core.plan_candidates finds that the
+blocked join's meeting volume reaches n_l*n_r, from the dense
+all-pairs l<r product (joins/core.dense_pairs).
+
+100 TB notes: verify is a JVM ``array_intersect`` + map-lookup
 aggregate on int tids (no Python anywhere in this join); headroom:
 with TFIDF_SCALE=10³, a df=1 token in an N=10¹²-record corpus has
 w = 10¹⁵, v² = tf²·10³⁰, and ~10³ distinct terms with tf ~10² keep
@@ -80,11 +84,11 @@ from ..cache import track
 from ..tokenizers import Tokenizer
 from ..validation import validate_join_inputs, validate_threshold
 from .core import (
-    DENSE_ALLPAIRS_CAP,
-    apply_salt,
+    blocked_pairs,
     build_salt_map,
     build_token_ranks,
-    prefix_meeting_estimate,
+    dense_pairs,
+    plan_candidates,
     resolve_salt_cap,
 )
 
@@ -238,59 +242,17 @@ def tfidf_join(
     ex_l = rec_l.select(F.col("id").alias("l_id"), F.explode("prefix").alias("token"))
     ex_r = rec_r.select(F.col("id").alias("r_id"), F.explode("prefix").alias("token"))
 
-    # cost-based dense path (joins/core.DENSE_ALLPAIRS_CAP rationale):
-    # when the exact meeting volume of the blocked prefix equi-join
-    # reaches n_l*n_r, an all-pairs broadcast nested-loop is strictly
-    # less work than the blocked join's own output and fuses candidate
-    # generation + verification into one zero-exchange stage. Exact
-    # verification filters both candidate sets to the identical
-    # result. Cosine is scale-invariant, so there is no size/norm band
-    # to carry — the dense candidate set is the full l<r product; for
-    # the same reason the set-sim gate's priced marginal window
-    # (core.DENSE_MEET_COST_RATIO) does not transfer: with no band to
-    # prune it, the dense verify volume IS n_l*n_r, which the window
-    # rule would only admit past est >= n^2*L/RATIO — stricter than
-    # the unconditional gate at realistic token counts. The bench
-    # corpus sits at est/n^2 = 5.2, far inside the unconditional gate.
-    n_l = rec_l.count()
-    n_r = n_l if self_join else rec_r.count()
-    use_dense = False
-    if 0 < max(n_l, n_r) <= DENSE_ALLPAIRS_CAP:
-        est = prefix_meeting_estimate(ex_l, ex_r, same=self_join)
-        use_dense = est >= n_l * n_r
-
+    # dense all-pairs vs blocked (joins/core.plan_candidates; cosine
+    # has no band, so the dense candidate set is the l<r product and
+    # the window is not priced)
+    use_dense, _ = plan_candidates(rec_l, rec_r, ex_l, ex_r, same=self_join)
     pair_pred = F.col("l_id") < F.col("r_id") if self_join else F.lit(True)
     if use_dense:
-        # streamed-side repartition: BNL parallelism == left-side
-        # partitions, and the cached rec frame's terminal groupBy is
-        # AQE-coalesced to 1-2 partitions — without this the fused
-        # candidate+verify stage runs serially (joins/core.
-        # dense_candidates carries the measured evidence)
-        n_part = int(l_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        dl = rec_l.select(F.col("id").alias("l_id")).repartition(n_part, "l_id")
-        dr = rec_r.select(F.col("id").alias("r_id"))
-        cand = dl.join(F.broadcast(dr), pair_pred, "inner")
+        cand = dense_pairs(rec_l.select(F.col("id").alias("l_id")),
+                           rec_r.select(F.col("id").alias("r_id")), pair_pred)
     else:
-        salt_map = build_salt_map(ranks, cap, key_col="tid")
-        ex_l, ex_r, join_keys = apply_salt(ex_l, ex_r, salt_map)
-
-        # pin the candidate join's exchanges to the session parallelism
-        # (same rationale as joins/core.candidate_pairs): the exploded
-        # prefix rows are narrow, so AQE's byte-based coalescing
-        # collapses the planner-inserted exchanges to 1-2 tasks and the
-        # join's posting-list x posting-list OUTPUT expansion then runs
-        # serially (measured: a 2-task 27 exec-s candidate stage =
-        # ~13s serial wall of the 22s tfidf bench query)
-        n_part = int(l_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        ex_l = ex_l.repartition(n_part, *join_keys)
-        ex_r = ex_r.repartition(n_part, *join_keys)
-
-        cand = (
-            ex_l.join(ex_r, join_keys)
-            .where(pair_pred)
-            .select("l_id", "r_id")
-            .distinct()
-        )
+        cand = blocked_pairs(ex_l, ex_r, build_salt_map(ranks, cap, key_col="tid"),
+                             pair_pred)
 
     lv = rec_l.select(
         F.col("id").alias("l_id"), F.col("tids").alias("l_tids"),

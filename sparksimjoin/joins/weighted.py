@@ -40,10 +40,13 @@ Filter-verify plan, same shape as joins/core.py:
    widening the prefix only adds candidates, never loses pairs).
    Computed as a pure array aggregate — no per-record window.
 3. candidates: exploded prefix equi-join on int tid, hot tokens split
-   by the shared mandatory salt (joins/core.build_salt_map — the same
+   by the shared mandatory salt (joins/core.blocked_pairs — the same
    100 TB skew defense as the unweighted joins), plus the weight band
    W(y) ∈ [f·W(x), W(x)/f] (jaccard: sim ≤ min(W)/max(W); cosine:
-   sim ≤ sqrt(min(W)/max(W))), epsilon-widened.
+   sim ≤ sqrt(min(W)/max(W))), epsilon-widened. When
+   joins/core.plan_candidates finds that the blocked join's meeting
+   volume reaches n_l*n_r, the same W-band runs instead as a dense
+   all-pairs nested loop over the record frames (joins/core.dense_pairs).
 4. verify: JVM `array_intersect` on the int tid arrays (primitive
    fast path) with weights looked up from a per-record map — exact
    BIGINT overlap weight, one float step, threshold compare.
@@ -62,11 +65,11 @@ from ..cache import track
 from ..tokenizers import Tokenizer
 from ..validation import validate_join_inputs, validate_threshold
 from .core import (
-    DENSE_ALLPAIRS_CAP,
-    apply_salt,
+    blocked_pairs,
     build_salt_map,
     build_token_ranks,
-    prefix_meeting_estimate,
+    dense_pairs,
+    plan_candidates,
     resolve_salt_cap,
 )
 
@@ -186,63 +189,20 @@ def _weighted_join(
     )
     pair_pred = F.col("l_id") < F.col("r_id") if self_join else F.lit(True)
 
-    # cost-based dense path (joins/core.DENSE_ALLPAIRS_CAP rationale —
-    # the same unconditional gate as set_sim_join/tfidf_join): when the
-    # exact meeting volume of the blocked prefix equi-join reaches
-    # n_l*n_r, an all-pairs broadcast nested-loop over the record
-    # frames is strictly less work than the blocked join's own output
-    # and fuses candidate generation + verification into one
-    # zero-exchange stage. The dense join evaluates the SAME W-band
-    # predicate the blocked path applies as a residual, so its
-    # candidate set is a superset of the blocked one only through
-    # dropped prefix blocking — exact verification maps both to the
-    # identical result. The set-sim gate's priced marginal window is
-    # not wired here: it needs a size histogram, and the W-band prunes
-    # on total weight, whose histogram is corpus-sized — while the
-    # bench corpus sits at est/n^2 = 3.1, far inside the unconditional
-    # gate anyway.
-    n_l = rec_l.count()
-    n_r = n_l if self_join else rec_r.count()
-    use_dense = False
-    if 0 < max(n_l, n_r) <= DENSE_ALLPAIRS_CAP:
-        est = prefix_meeting_estimate(ex_l, ex_r, same=self_join)
-        use_dense = est >= n_l * n_r
-
+    # dense all-pairs vs blocked (joins/core.plan_candidates; the
+    # W-band histogram is corpus-sized, so the window is not priced).
+    # The dense join evaluates the SAME W-band predicate the blocked
+    # path applies as a residual
+    use_dense, _ = plan_candidates(rec_l, rec_r, ex_l, ex_r, same=self_join)
     if use_dense:
-        # streamed-side repartition: BNL parallelism == left-side
-        # partitions, and the cached rec frame's terminal groupBy is
-        # AQE-coalesced to 1-2 partitions — without this the fused
-        # candidate+verify stage ran as ONE task (measured: 1-task
-        # 38 exec-s stage = the whole query serial; 32-task after)
-        n_part = int(l_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        dl = rec_l.select(
-            F.col("id").alias("l_id"), F.col("tw").alias("l_tw")
-        ).repartition(n_part, "l_id")
-        dr = rec_r.select(F.col("id").alias("r_id"), F.col("tw").alias("r_tw"))
-        cand = (
-            dl.join(F.broadcast(dr), band & pair_pred, "inner")
-            .select("l_id", "r_id")
+        cand = dense_pairs(
+            rec_l.select(F.col("id").alias("l_id"), F.col("tw").alias("l_tw")),
+            rec_r.select(F.col("id").alias("r_id"), F.col("tw").alias("r_tw")),
+            band & pair_pred,
         )
     else:
         salt_map = build_salt_map(ranks, resolve_salt_cap(salt_cap), key_col="tid")
-        ex_l, ex_r, join_keys = apply_salt(ex_l, ex_r, salt_map)
-
-        # pin the candidate join's exchanges to the session parallelism
-        # (same rationale as joins/core.candidate_pairs): narrow
-        # exploded prefix rows get AQE-coalesced to 1-2 tasks and the
-        # join's output expansion runs serially (measured: a 1-task
-        # 12.6 exec-s candidate stage = ~12s serial wall of the 15s
-        # weighted bench query)
-        n_part = int(l_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        ex_l = ex_l.repartition(n_part, *join_keys)
-        ex_r = ex_r.repartition(n_part, *join_keys)
-
-        cand = (
-            ex_l.join(ex_r, join_keys)
-            .where(band & pair_pred)
-            .select("l_id", "r_id")
-            .distinct()
-        )
+        cand = blocked_pairs(ex_l, ex_r, salt_map, band & pair_pred)
 
     lv = rec_l.select(
         F.col("id").alias("l_id"), F.col("tids").alias("l_tids"),

@@ -38,7 +38,6 @@ from .joins.core import (
     ensure_iid,
     order_tokens,
     prefix_explode,
-    resolve_position_mode,
     verify_pairs,
 )
 from .tokenizers import Tokenizer, WhitespaceTokenizer
@@ -62,12 +61,6 @@ class PipelineConfig:
     # candidates manifest ("no silent caps"). None = off (default, and
     # required for the parity/F1 gates).
     stop_token_cap: int | None = None
-    # PPJoin position-bound mode for the candidate join: "occurrence",
-    # "aggregate", or None -> joins/core.resolve_position_mode picks
-    # by measure/threshold. Exposed because the crossover is workload-
-    # dependent (vocabulary size / prefix length); both modes are
-    # output-equivalent (losslessness test in test_joins_parity).
-    position_mode: str | None = None
     # temporal blocking (input_hint ts column): when set, candidate
     # pairs additionally require |min(ts)_l - min(ts)_r| <=
     # time_window_seconds (conversation start times within the
@@ -339,9 +332,9 @@ def _run_stages(
                   # joins); the scored stage detects pre-iid
                   # checkpoints by the stored l_id dtype
                   "id_space": "iid64"}
-    # position_mode/salt_cap are deliberately NOT compared: both are
-    # output-equivalent plan knobs (losslessness tested), so resuming
-    # under a different value reads back identical candidates
+    # salt_cap is deliberately NOT compared: it is an output-equivalent
+    # plan knob (losslessness tested), so resuming under a different
+    # value reads back identical candidates
     _check_stage_params(ckpt, "candidates", {
         "measure": cfg.measure, "threshold": cfg.threshold,
         "tokenizer": tokenizer_descriptor(cfg),
@@ -377,8 +370,6 @@ def _run_stages(
                                   key_col="token")
         cand = candidate_pairs(
             ex_l, ex_r, cfg.measure, cfg.threshold, self_join=True, salt_map=salt_map,
-            position_mode=cfg.position_mode
-            or resolve_position_mode(cfg.measure, cfg.threshold),
         )
         if cfg.time_window_seconds is not None:
             cand = _apply_time_window(cand, tokens, records, cfg)

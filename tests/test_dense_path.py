@@ -1,8 +1,10 @@
-"""Equivalence of the cost-based dense all-pairs candidate path
-(joins/core.dense_candidates + the probes in set_sim_join/tfidf_join)
-with the blocked prefix-filter path — the round-6 optimization's
-correctness contract: candidate sets differ (dense is a superset) but
-exact verification must map both to the IDENTICAL result."""
+"""Equivalence of the cost-based dense all-pairs candidate path with
+the blocked prefix-filter path, and both sides of every branch of the
+candidate-path rule (joins/core.plan_candidates, shared by the set-sim,
+tfidf and weighted joins). Candidate sets differ (dense is a superset)
+but exact verification must map both to the IDENTICAL result. Each
+equivalence test patches the one gate symbol, core.DENSE_ALLPAIRS_CAP,
+to force the blocked arm."""
 
 from __future__ import annotations
 
@@ -47,27 +49,33 @@ def _pairs(df):
     )
 
 
+def _n_bnl(df):
+    """BroadcastNestedLoopJoin count in the executed plan. Some plans
+    carry BNLs of their own (the allow_empty cross join, the weight
+    tables' N crossJoin), so a dense arm is identified by exactly one
+    more BNL than its blocked twin."""
+    return df._jdf.queryExecution().executedPlan().toString().count(
+        "BroadcastNestedLoopJoin"
+    )
+
+
 @pytest.mark.parametrize("threshold", [0.5, 0.8])
-def test_dense_vs_blocked_jaccard_identical(spark, threshold):
-    """Force both paths via DENSE_ALLPAIRS_CAP monkey-knob-free A/B:
-    the dense corpus triggers the probe naturally; the blocked arm is
-    obtained by disabling the probe through a stop-gap comp_op-safe
-    route — here, by patching the cap to 0."""
+def test_dense_vs_blocked_jaccard_identical(spark, monkeypatch, threshold):
+    """The dense corpus triggers the probe naturally; the blocked arm
+    patches the cap to 0, so the probe can never trigger. At t=0.8 the
+    prefixes are short and the 12-word corpus stays blocked, so that
+    arm uses an 8-word vocabulary (dense through the priced window)."""
     import sparksimjoin.joins.core as core
 
-    corpus = _dense_corpus(spark)
+    corpus = _dense_corpus(spark, vocab=12 if threshold < 0.8 else 8)
     dense = jaccard_join(corpus, corpus, "id", "id", "text", "text", WS,
                          threshold, self_join=True, dedup_strings=False)
+    monkeypatch.setattr(core, "DENSE_ALLPAIRS_CAP", 0)
+    blocked = jaccard_join(corpus, corpus, "id", "id", "text", "text", WS,
+                           threshold, self_join=True, dedup_strings=False)
+    assert _n_bnl(dense) == _n_bnl(blocked) + 1
     got_dense = _pairs(dense.select("l_id", "r_id", "_sim_score"))
-
-    old = core.DENSE_ALLPAIRS_CAP
-    core.DENSE_ALLPAIRS_CAP = 0  # probe can never trigger -> blocked
-    try:
-        blocked = jaccard_join(corpus, corpus, "id", "id", "text", "text", WS,
-                               threshold, self_join=True, dedup_strings=False)
-        got_blocked = _pairs(blocked.select("l_id", "r_id", "_sim_score"))
-    finally:
-        core.DENSE_ALLPAIRS_CAP = old
+    got_blocked = _pairs(blocked.select("l_id", "r_id", "_sim_score"))
     assert got_dense == got_blocked
     assert len(got_dense) > 0
 
@@ -91,7 +99,7 @@ def test_dense_probe_actually_fires(spark):
     assert "BroadcastNestedLoopJoin" not in plan_sparse
 
 
-def test_dense_vs_blocked_tversky_asymmetric(spark):
+def test_dense_vs_blocked_tversky_asymmetric(spark, monkeypatch):
     """Asymmetric Tversky self-join (the orientation-sensitive verify)
     through both candidate paths."""
     import sparksimjoin.joins.core as core
@@ -100,74 +108,50 @@ def test_dense_vs_blocked_tversky_asymmetric(spark):
     kw = dict(alpha=0.7, beta=0.3, self_join=True, allow_empty=False)
     dense = tversky_index_join(corpus, corpus, "id", "id", "text", "text",
                                WS, 0.5, **kw)
+    monkeypatch.setattr(core, "DENSE_ALLPAIRS_CAP", 0)
+    blocked = tversky_index_join(corpus, corpus, "id", "id", "text", "text",
+                                 WS, 0.5, **kw)
+    assert _n_bnl(dense) == _n_bnl(blocked) + 1
     got_dense = _pairs(dense.select("l_id", "r_id", "_sim_score"))
-    old = core.DENSE_ALLPAIRS_CAP
-    core.DENSE_ALLPAIRS_CAP = 0
-    try:
-        blocked = tversky_index_join(corpus, corpus, "id", "id", "text", "text",
-                                     WS, 0.5, **kw)
-        got_blocked = _pairs(blocked.select("l_id", "r_id", "_sim_score"))
-    finally:
-        core.DENSE_ALLPAIRS_CAP = old
+    got_blocked = _pairs(blocked.select("l_id", "r_id", "_sim_score"))
     assert got_dense == got_blocked
     assert len(got_dense) > 0
 
 
-def test_dense_vs_blocked_tfidf(spark):
-    """tfidf_join's own dense probe (and the adaptive BIGINT dot) vs
-    the blocked path with the DECIMAL dot: scores must be
-    bit-identical (both integer-exact)."""
+def test_dense_vs_blocked_tfidf(spark, monkeypatch):
+    """tfidf_join's dense path (and the adaptive BIGINT dot) vs the
+    blocked path: scores must be bit-identical (both integer-exact)."""
     import sparksimjoin.joins.core as core
-    import sparksimjoin.joins.tfidf as tfidf_mod
 
     corpus = _dense_corpus(spark)
     dense = tfidf_join(corpus, corpus, "id", "id", "text", "text", WS, 0.5,
                        self_join=True)
+    monkeypatch.setattr(core, "DENSE_ALLPAIRS_CAP", 0)
+    blocked = tfidf_join(corpus, corpus, "id", "id", "text", "text", WS, 0.5,
+                         self_join=True)
+    assert _n_bnl(dense) == _n_bnl(blocked) + 1
     got_dense = _pairs(dense)
-    old = core.DENSE_ALLPAIRS_CAP
-    tfidf_mod.DENSE_ALLPAIRS_CAP = 0
-    try:
-        blocked = tfidf_join(corpus, corpus, "id", "id", "text", "text", WS, 0.5,
-                             self_join=True)
-        got_blocked = _pairs(blocked)
-    finally:
-        tfidf_mod.DENSE_ALLPAIRS_CAP = old
+    got_blocked = _pairs(blocked)
     assert got_dense == got_blocked
     assert len(got_dense) > 0
 
 
-def test_dense_vs_blocked_weighted_jaccard(spark):
-    """_weighted_join's dense probe (round-6 batch 2): the dense arm
-    evaluates the same W-band predicate inside the BNL, so both paths
-    must verify to the identical exact-integer-weight result; the
-    dense corpus must actually fire the probe (BNL in the plan)."""
-    import sparksimjoin.joins.weighted as wmod
+def test_dense_vs_blocked_weighted_jaccard(spark, monkeypatch):
+    """The weighted dense arm evaluates the same W-band predicate
+    inside the BNL, so both paths must verify to the identical
+    exact-integer-weight result."""
+    import sparksimjoin.joins.core as core
     from sparksimjoin.joins.weighted import weighted_jaccard_join
 
     corpus = _dense_corpus(spark)
     dense = weighted_jaccard_join(corpus, corpus, "id", "id", "text", "text",
                                   WS, 0.5, self_join=True)
-    # the weight table's crossJoin(broadcast(N)) is itself one BNL in
-    # EVERY weighted plan; the dense candidate path adds a second one
-    # (the W-band nested loop over the record frames)
-    n_bnl_dense = dense._jdf.queryExecution().executedPlan().toString().count(
-        "BroadcastNestedLoopJoin"
-    )
+    monkeypatch.setattr(core, "DENSE_ALLPAIRS_CAP", 0)
+    blocked = weighted_jaccard_join(corpus, corpus, "id", "id", "text",
+                                    "text", WS, 0.5, self_join=True)
+    assert _n_bnl(dense) == _n_bnl(blocked) + 1
     got_dense = _pairs(dense)
-    old = wmod.DENSE_ALLPAIRS_CAP
-    wmod.DENSE_ALLPAIRS_CAP = 0
-    try:
-        blocked = weighted_jaccard_join(corpus, corpus, "id", "id", "text",
-                                        "text", WS, 0.5, self_join=True)
-        n_bnl_blocked = (
-            blocked._jdf.queryExecution().executedPlan().toString().count(
-                "BroadcastNestedLoopJoin"
-            )
-        )
-        assert n_bnl_dense == n_bnl_blocked + 1, (n_bnl_dense, n_bnl_blocked)
-        got_blocked = _pairs(blocked)
-    finally:
-        wmod.DENSE_ALLPAIRS_CAP = old
+    got_blocked = _pairs(blocked)
     assert got_dense == got_blocked
     assert len(got_dense) > 0
 
@@ -192,11 +176,22 @@ def test_dense_gate_row_cap(spark, monkeypatch):
 
     for cap, dense in ((n, True), (n - 1, False)):
         monkeypatch.setattr(core, "DENSE_ALLPAIRS_CAP", cap)
+        m: dict = {}
         out = jaccard_join(corpus, corpus, "id", "id", "text", "text", WS,
                            0.5, self_join=True, dedup_strings=False,
-                           allow_empty=False)
+                           allow_empty=False, metrics_out=m)
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert ("BroadcastNestedLoopJoin" in plan) == dense, cap
+        cp = m["candidate_plan"]
+        assert cp["path"] == ("dense" if dense else "blocked"), cp
+        assert cp["n_l"] == cp["n_r"] == n and cp["cap"] == cap, cp
+        # over the cap the gate never probes; at est >= n^2 the
+        # window (and its band-pair jobs) is never entered
+        if dense:
+            assert cp["est"] >= n * n, cp
+        else:
+            assert cp["est"] is None, cp
+        assert cp["bp"] is None, cp
 
 
 def test_dense_gate_marginal_window(spark):
@@ -247,11 +242,17 @@ def test_dense_gate_marginal_window(spark):
     assert est < n_rec * n_rec, (est, n_rec)
     assert est * DENSE_MEETING_FACTOR >= n_rec * n_rec, (est, n_rec)
     assert bp * lbar <= DENSE_MEET_COST_RATIO * est, (bp, lbar, est)
+    m: dict = {}
     out = jaccard_join(short, short, "id", "id", "text", "text", WS, 0.5,
-                       self_join=True, dedup_strings=False, allow_empty=False)
+                       self_join=True, dedup_strings=False, allow_empty=False,
+                       metrics_out=m)
     assert "BroadcastNestedLoopJoin" in (
         out._jdf.queryExecution().executedPlan().toString()
     )
+    cp = m["candidate_plan"]
+    assert cp["path"] == "dense", cp
+    assert (cp["n_l"], cp["n_r"], cp["est"], cp["bp"]) == (
+        n_rec, n_rec, est, bp), cp
 
     # long-record corpus, same window shape: the n^2-ish band-pair
     # volume x ~60-token arrays overwhelms the meeting-row savings ->
@@ -261,11 +262,17 @@ def test_dense_gate_marginal_window(spark):
     assert est < n_rec * n_rec, (est, n_rec)
     assert est * DENSE_MEETING_FACTOR >= n_rec * n_rec, (est, n_rec)
     assert bp * lbar > DENSE_MEET_COST_RATIO * est, (bp, lbar, est)
+    m = {}
     out = jaccard_join(long, long, "id", "id", "text", "text", WS, 0.5,
-                       self_join=True, dedup_strings=False, allow_empty=False)
+                       self_join=True, dedup_strings=False, allow_empty=False,
+                       metrics_out=m)
     assert "BroadcastNestedLoopJoin" not in (
         out._jdf.queryExecution().executedPlan().toString()
     )
+    cp = m["candidate_plan"]
+    assert cp["path"] == "blocked", cp
+    assert (cp["n_l"], cp["n_r"], cp["est"], cp["bp"]) == (
+        n_rec, n_rec, est, bp), cp
 
 
 def test_overlap_coeff_zipf_stays_blocked(spark):
@@ -296,19 +303,25 @@ def test_overlap_coeff_zipf_stays_blocked(spark):
     # this test stops guarding the window rule
     assert est < n * n, (est, n)
     assert est * DENSE_MEETING_FACTOR >= n * n, (est, n)
+    m: dict = {}
     out = overlap_coefficient_join(
         corpus, corpus, "id", "id", "text", "text", WS, 0.8,
-        self_join=True, allow_empty=False, dedup_strings=False,
+        self_join=True, allow_empty=False, dedup_strings=False, metrics_out=m,
     )
     assert "BroadcastNestedLoopJoin" not in (
         out._jdf.queryExecution().executedPlan().toString()
     )
+    # the window was priced, and the unpruned band is the pair square
+    cp = m["candidate_plan"]
+    assert cp["path"] == "blocked", cp
+    assert (cp["n_l"], cp["n_r"], cp["est"]) == (n, n, est), cp
+    assert cp["bp"] == n * n, cp
 
 
 def test_dense_not_used_for_lossy_or_nonmonotone(spark):
-    """stop_token_cap (lossy candidate semantics) and comp_op '<='
-    (verify keeps low scores) must keep the blocked path regardless of
-    corpus shape."""
+    """stop_token_cap (lossy candidate semantics) and the non-monotone
+    comp_op '=' (the only one set-sim validation admits besides '>=' and
+    '>') must keep the blocked path regardless of corpus shape."""
     corpus = _dense_corpus(spark)
     capped = jaccard_join(corpus, corpus, "id", "id", "text", "text", WS, 0.5,
                           self_join=True, dedup_strings=False,
@@ -316,12 +329,20 @@ def test_dense_not_used_for_lossy_or_nonmonotone(spark):
     assert "BroadcastNestedLoopJoin" not in (
         capped._jdf.queryExecution().executedPlan().toString()
     )
+    equal = jaccard_join(corpus, corpus, "id", "id", "text", "text", WS, 0.5,
+                         comp_op="=", self_join=True, dedup_strings=False,
+                         allow_empty=False)
+    assert "BroadcastNestedLoopJoin" not in (
+        equal._jdf.queryExecution().executedPlan().toString()
+    )
 
 
-def test_candidate_budget_guard(spark):
-    """candidate_budget (verdict item 4): a breached budget must
-    refuse to launch with the projected volume in the error; a
-    generous budget must not change the result."""
+def test_candidate_budget_guard(spark, monkeypatch):
+    """candidate_budget: a breached budget must refuse to launch with
+    the projected volume in the error, also when the dense gate never
+    probes (cap 0); a generous budget must not change the result, and
+    the gate reuses the budget's meeting estimate (one probe)."""
+    import sparksimjoin.joins.core as core
     from sparksimjoin import overlap_coefficient_join
 
     corpus = _dense_corpus(spark)
@@ -331,11 +352,30 @@ def test_candidate_budget_guard(spark):
             self_join=True, dedup_strings=False, allow_empty=False,
             candidate_budget=10,
         ).count()
-    ok = overlap_coefficient_join(
-        corpus, corpus, "id", "id", "text", "text", WS, 0.6,
-        self_join=True, dedup_strings=False, allow_empty=False,
-        candidate_budget=10**12,
-    )
+    with monkeypatch.context() as mp:
+        mp.setattr(core, "DENSE_ALLPAIRS_CAP", 0)
+        with pytest.raises(ValueError, match="candidate meeting volume"):
+            overlap_coefficient_join(
+                corpus, corpus, "id", "id", "text", "text", WS, 0.6,
+                self_join=True, dedup_strings=False, allow_empty=False,
+                candidate_budget=10,
+            ).count()
+
+    calls = []
+    orig = core.prefix_meeting_estimate
+
+    def counting(*a, **kw):
+        calls.append(1)
+        return orig(*a, **kw)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(core, "prefix_meeting_estimate", counting)
+        ok = overlap_coefficient_join(
+            corpus, corpus, "id", "id", "text", "text", WS, 0.6,
+            self_join=True, dedup_strings=False, allow_empty=False,
+            candidate_budget=10**12,
+        )
+    assert len(calls) == 1, calls
     base = overlap_coefficient_join(
         corpus, corpus, "id", "id", "text", "text", WS, 0.6,
         self_join=True, dedup_strings=False, allow_empty=False,
