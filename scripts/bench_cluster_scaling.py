@@ -59,9 +59,10 @@ QUIET_DEADLINE = float(os.environ.get("SPARKSIMJOIN_QUIET_DEADLINE", "3600"))
 
 
 def wait_for_quiet(deadline_s: float = 3600.0) -> float:
-    """Poll the first-touch probe until the host is healthy (same gate
-    as hunt_scaling.py); returns the healthy probe reading. Firing legs
-    inside a poisoned window produced the discarded 15:52 row."""
+    """Poll the first-touch probe until the host is healthy (first-touch
+    bandwidth >= FT_MIN and 1-minute load <= LOAD_MAX); returns the
+    healthy probe reading. Firing legs inside a poisoned window
+    produced the discarded 15:52 row."""
     end = time.time() + deadline_s
     while True:
         with open("/proc/loadavg") as f:

@@ -72,33 +72,47 @@ from .joins.core import (
     resolve_salt_cap,
     verify_pairs,
 )
-from .pipeline import PipelineConfig, prepare_records, tokenizer_descriptor
+from .pipeline import (
+    PipelineConfig,
+    prepare_records,
+    tokenizer_descriptor,
+    tokens_join_strategy,
+)
+
+
+def _chain_links(ckpt: CheckpointManager, fmt: str, name: str):
+    """Yield ``(manager, manifest of name)`` for ``ckpt`` and each base
+    its ``name`` manifest chains to (the manifest carries a ``base``
+    pointer when the dir is an incremental one). Chain length = number
+    of batches — a driver-side walk over manifests only, no data
+    action."""
+    cur: CheckpointManager | None = ckpt
+    seen = set()
+    while cur is not None:
+        assert cur.root not in seen, f"checkpoint base chain cycle at {cur.root}"
+        seen.add(cur.root)
+        m = cur.manifest(name)
+        yield cur, m
+        base = m.get("base")
+        cur = CheckpointManager(cur.spark, base, fmt=fmt) if base else None
 
 
 def _chained_stage(
     ckpt: CheckpointManager, fmt: str, name: str, per_link=None
 ) -> DataFrame:
-    """Union a per-batch stage across the base chain (the stage's
-    manifest carries a ``base`` pointer when the dir is an
-    incremental one). Chain length = number of batches — a driver-
-    side walk over manifests only, no data action.
+    """Union a per-batch stage across the base chain
+    (:func:`_chain_links`).
 
     ``per_link(df, depth)`` transforms each link before the union
     (depth 0 = the immediate base's own stage). The tokens chain uses
     it to stamp a per-link iid namespace: stored iids are frame-local
     (with_iid ns 0), so two links' iids WOULD collide in the union."""
     frames = []
-    cur: CheckpointManager | None = ckpt
-    seen = set()
-    while cur is not None:
-        assert cur.root not in seen, f"checkpoint base chain cycle at {cur.root}"
-        seen.add(cur.root)
+    for cur, _ in _chain_links(ckpt, fmt, name):
         df = cur.read(name)
         if per_link is not None:
             df = per_link(df, len(frames))
         frames.append(df)
-        base = cur.manifest(name).get("base")
-        cur = CheckpointManager(cur.spark, base, fmt=fmt) if base else None
     return reduce(DataFrame.unionByName, frames)
 
 
@@ -106,17 +120,7 @@ def _chained_rows(ckpt: CheckpointManager, fmt: str, name: str) -> int:
     """Total manifest row count of a stage across the base chain —
     the size of what :func:`_chained_stage` would union, as a
     driver-side manifest walk (no data action)."""
-    total = 0
-    cur: CheckpointManager | None = ckpt
-    seen = set()
-    while cur is not None:
-        assert cur.root not in seen, f"checkpoint base chain cycle at {cur.root}"
-        seen.add(cur.root)
-        m = cur.manifest(name)
-        total += int(m["rows"])
-        base = m.get("base")
-        cur = CheckpointManager(cur.spark, base, fmt=fmt) if base else None
-    return total
+    return sum(int(m["rows"]) for _, m in _chain_links(ckpt, fmt, name))
 
 
 def _require_base_stages(base: CheckpointManager) -> None:
@@ -382,33 +386,12 @@ def _run_stages(
         # estimate. Sized on the LARGER r side (base+new union) — the
         # incremental verify's token table is bigger than the batch
         # case's, so the sort-merge fallback cliff is nearer, not
-        # farther.
-        n_tok = (
-            ckpt.manifest("tokens")["rows"]
-            + _chained_rows(base, fmt, "tokens")
+        # farther. The byte guard sums parquet bytes over the chain.
+        strategy = tokens_join_strategy(
+            cfg,
+            ckpt.manifest("tokens")["rows"] + _chained_rows(base, fmt, "tokens"),
+            [ckpt] + [cur for cur, _ in _chain_links(base, fmt, "tokens")],
         )
-        # byte guard mirrors pipeline._scored (PipelineConfig.
-        # tokens_broadcast_bytes_cap): per-manager parquet bytes
-        # summed over the chain; Iceberg contributes 0 and the row
-        # cap alone decides
-        from .pipeline import TOKENS_BROADCAST_EXPANSION, tokens_checkpoint_bytes
-
-        tok_bytes = tokens_checkpoint_bytes(ckpt)
-        cur = base
-        seen = set()
-        while cur is not None:
-            if cur.root in seen:
-                break
-            seen.add(cur.root)
-            tok_bytes += tokens_checkpoint_bytes(cur)
-            b = cur.manifest("tokens").get("base")
-            cur = CheckpointManager(cur.spark, b, fmt=fmt) if b else None
-        fits = (
-            n_tok <= cfg.tokens_broadcast_cap
-            and tok_bytes * TOKENS_BROADCAST_EXPANSION
-            <= cfg.tokens_broadcast_bytes_cap
-        )
-        strategy = "broadcast" if fits else "shuffle_hash"
         # spread=False: candidates come straight off the checkpoint
         # (hash-spread by the distinct exchange at write time, re-split
         # by the parquet reader) — the pair-key exchange re-shuffled

@@ -18,12 +18,18 @@ SURVEY.md §3.1):
 - optional deterministic salting splits hot blocking tokens: a tiny
   broadcast map ``token -> nsalts`` (doc-freq > cap) assigns the left
   row to ``pmod(xxhash64(id), nsalts)`` and replicates only the right
-  rows of hot tokens across salts — no lost pairs (property-tested).
+  rows of hot tokens across salts — no lost pairs (property-tested);
+- the string joins (set-sim, edit distance, Jaro, Hamming) share one
+  envelope around their measure-specific blocking: :func:`dedup_view`
+  (exact-duplicate prologue), :func:`verify_strings` (the edit/Jaro
+  iid -> string verify stage) and :func:`result_tail` (empty pairs,
+  gid expansion, diagonal, missing pairs, output projection).
 """
 
 from __future__ import annotations
 
 from functools import reduce
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -526,6 +532,56 @@ def string_dedup_maps(
         return l_reps, l_reps, l_map, l_map
     r_reps, r_map = one_side(r_df, r_key_attr, r_join_attr)
     return l_reps, r_reps, l_map, r_map
+
+
+class DedupView(NamedTuple):
+    """The tables a string join runs its filter-verify on: the
+    ``__gid``/``__val`` representatives when the dedup pre-pass is on
+    (``l_map``/``r_map`` are then the membership maps), else the input
+    tables themselves with both maps ``None``."""
+
+    l_df: DataFrame
+    r_df: DataFrame
+    l_key: str
+    r_key: str
+    l_attr: str
+    r_attr: str
+    l_map: DataFrame | None
+    r_map: DataFrame | None
+
+    @property
+    def tables(self) -> tuple:
+        """(l_df, r_df, l_key, r_key, l_attr, r_attr), in the order
+        :func:`prepare_sides` takes them."""
+        return self[:6]
+
+
+def dedup_view(
+    dedup_strings: bool | str,
+    l_df: DataFrame,
+    r_df: DataFrame,
+    l_key_attr: str,
+    r_key_attr: str,
+    l_join_attr: str,
+    r_join_attr: str,
+    key_fn,
+) -> DedupView:
+    """The exact-duplicate prologue of every string join:
+    :func:`resolve_dedup` decides, and on opt-in
+    :func:`string_dedup_maps` collapses each side to one representative
+    per dedup key (``key_fn``; None = the raw string), so candidates
+    and verify run once per distinct value and :func:`result_tail`
+    expands back to record ids. A self-join collapses to ONE reps
+    frame handed to both sides, so the identity checks downstream
+    (:func:`prepare_sides`, :func:`plan_candidates`) still see it."""
+    if not resolve_dedup(dedup_strings, l_df, r_df, l_join_attr, r_join_attr,
+                         key_fn=key_fn):
+        return DedupView(l_df, r_df, l_key_attr, r_key_attr, l_join_attr, r_join_attr,
+                         None, None)
+    l_rep, r_rep, l_map, r_map = string_dedup_maps(
+        l_df, r_df, l_key_attr, r_key_attr, l_join_attr, r_join_attr, key_fn=key_fn
+    )
+    return DedupView(l_rep, r_rep, "__gid", "__gid", "__val", "__val", l_map, r_map)
 
 
 def expand_gid_pairs(
@@ -1156,6 +1212,53 @@ def verify_pairs(
     return scored.select(*sel, "_sim_score")
 
 
+def verify_strings(
+    cand: DataFrame,
+    prep_l: DataFrame,
+    prep_r: DataFrame,
+    view: DedupView,
+    score: Column,
+    keep: Column,
+    self_join: bool,
+) -> DataFrame:
+    """Verify iid-space candidates of a character-level join (edit
+    distance, Jaro) on the ORIGINAL strings. Candidates carry iids;
+    the strings live in the view's tables, so the iids decode to
+    original keys through the narrow prep projections and the
+    non-null strings are fetched by key — long-key joins until the
+    final string join. ``score`` is the caller's kernel over
+    ``_ls``/``_rs`` (stored as ``_sim_score``), ``keep`` its predicate
+    over ``_sim_score``. -> (l_id, r_id, _sim_score) in original-key
+    space; iid-space pair orientation is arbitrary wrt the original
+    keys, so self-joins restore the canonical (least, greatest) one.
+
+    The candidates are repartitioned on the pair key first: a uniform
+    spread for the CPU-heavy kernel stage, which AQE's byte-based
+    coalescing would otherwise shrink to a handful of tasks."""
+    l_str = view.l_df.where(F.col(view.l_attr).isNotNull()).select(
+        F.col(view.l_key).alias("_lo"), F.col(view.l_attr).alias("_ls")
+    )
+    r_str = view.r_df.where(F.col(view.r_attr).isNotNull()).select(
+        F.col(view.r_key).alias("_ro"), F.col(view.r_attr).alias("_rs")
+    )
+    l_dec = prep_l.select(F.col("iid").alias("l_id"), F.col("id").alias("_lo"))
+    r_dec = prep_r.select(F.col("iid").alias("r_id"), F.col("id").alias("_ro"))
+    n_part = int(cand.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    scored = (
+        cand.repartition(n_part, "l_id", "r_id")
+        .join(l_dec, "l_id").join(r_dec, "r_id")
+        .join(l_str, "_lo").join(r_str, "_ro")
+        .withColumn("_sim_score", score)
+        .where(keep)
+    )
+    if self_join:
+        sel = [F.least("_lo", "_ro").alias("l_id"),
+               F.greatest("_lo", "_ro").alias("r_id")]
+    else:
+        sel = [F.col("_lo").alias("l_id"), F.col("_ro").alias("r_id")]
+    return scored.select(*sel, "_sim_score")
+
+
 def empty_pairs(
     prep_l: DataFrame,
     prep_r: DataFrame,
@@ -1270,3 +1373,59 @@ def project_output(
     else:
         out = out.withColumn("_id", F.monotonically_increasing_id())
     return out.select("_id", *[c for c in out.columns if c != "_id"])
+
+
+def result_tail(
+    pairs: DataFrame,
+    view: DedupView,
+    prep_l: DataFrame,
+    prep_r: DataFrame,
+    l_df: DataFrame,
+    r_df: DataFrame,
+    l_key_attr: str,
+    r_key_attr: str,
+    l_join_attr: str,
+    r_join_attr: str,
+    l_out_attrs: list[str] | None,
+    r_out_attrs: list[str] | None,
+    l_out_prefix: str,
+    r_out_prefix: str,
+    out_sim_score: bool,
+    dense_id: bool,
+    *,
+    measure: str,
+    threshold: float,
+    comp_op: str,
+    allow_empty: bool,
+    allow_missing: bool,
+    self_join: bool,
+    metrics_out: dict | None,
+) -> DataFrame:
+    """Everything a string join does after verify, in one fixed order:
+    verified ``pairs`` ∪ :func:`empty_pairs` (when ``allow_empty``; in
+    gid space, before expansion), then, when ``view`` carries dedup
+    maps, :func:`expand_gid_pairs` and on self-joins ∪
+    :func:`diagonal_pairs` (identical strings, scored by ``measure``
+    against ``threshold``; ``prep_l`` supplies the group sizes), then
+    ∪ :func:`missing_pairs` (when ``allow_missing``, on the input
+    tables) and :func:`project_output`."""
+    if allow_empty:
+        ep = empty_pairs(prep_l, prep_r, threshold, comp_op, self_join=self_join,
+                         metrics_out=metrics_out)
+        if ep is not None:
+            pairs = pairs.unionByName(ep)
+    if view.l_map is not None:
+        pairs = expand_gid_pairs(pairs, view.l_map, view.r_map, self_join)
+        if self_join:
+            pairs = pairs.unionByName(
+                diagonal_pairs(view.l_map, prep_l, measure, threshold, comp_op, allow_empty)
+            )
+    if allow_missing:
+        pairs = pairs.unionByName(
+            missing_pairs(l_df, r_df, l_key_attr, r_key_attr, l_join_attr, r_join_attr,
+                          self_join=self_join)
+        )
+    return project_output(
+        pairs, l_df, r_df, l_key_attr, r_key_attr, l_out_attrs, r_out_attrs,
+        l_out_prefix, r_out_prefix, out_sim_score, dense_id,
+    )

@@ -29,14 +29,12 @@ from ..validation import validate_join_inputs
 from .core import (
     build_salt_map,
     candidate_pairs,
-    diagonal_pairs,
-    expand_gid_pairs,
-    missing_pairs,
+    dedup_view,
     prefix_explode,
     prepare_sides,
-    project_output,
-    resolve_dedup,
-    string_dedup_maps,
+    resolve_salt_cap,
+    result_tail,
+    verify_strings,
 )
 
 
@@ -78,23 +76,14 @@ def edit_distance_join(
     # largest admissible distance is `band`
     band = int(math.floor(threshold)) if comp_op in ("<=", "=") else max(int(math.ceil(threshold)) - 1, 0)
 
-    use_dedup = resolve_dedup(dedup_strings, l_df, r_df, l_join_attr, r_join_attr)
-    if use_dedup:
-        # exact-duplicate collapse: candidates + levenshtein run once
-        # per distinct string pair; expansion restores record ids
-        l_rep, r_rep, l_map, r_map = string_dedup_maps(
-            l_df, r_df, l_key_attr, r_key_attr, l_join_attr, r_join_attr
-        )
-        vl, vr, vlk, vrk, vla, vra = l_rep, r_rep, "__gid", "__gid", "__val", "__val"
-    else:
-        vl, vr, vlk, vrk, vla, vra = (
-            l_df, r_df, l_key_attr, r_key_attr, l_join_attr, r_join_attr
-        )
-    prep_l, prep_r, ranks = prepare_sides(vl, vr, vlk, vrk, vla, vra, tok)
+    # exact-duplicate collapse (joins/core.dedup_view): candidates +
+    # levenshtein run once per distinct string pair; the result tail
+    # expands back to record ids
+    view = dedup_view(dedup_strings, l_df, r_df, l_key_attr, r_key_attr,
+                      l_join_attr, r_join_attr, None)
+    prep_l, prep_r, ranks = prepare_sides(*view.tables, tok)
     ex_l = prefix_explode(prep_l, "l", EDIT_DISTANCE, band, q)
     ex_r = prefix_explode(prep_r, "r", EDIT_DISTANCE, band, q)
-    from .core import resolve_salt_cap
-
     salt_map = build_salt_map(ranks, resolve_salt_cap(salt_cap))
     # size residual (qgram-count band == string-length band for padded
     # grams) via size_bounds_expr, plus the PPJoin position bound:
@@ -148,55 +137,18 @@ def edit_distance_join(
     cand = cand.unionAll(short_cand).distinct()
 
     # verify with the banded built-in levenshtein (returns -1 above
-    # band). Candidates carry iids; the string values live in the
-    # original tables, so verify decodes iid -> original id through
-    # the narrow prep projections and fetches the strings by original
-    # key — the same joins the string fetch needed anyway, one hop
-    # longer per side, all on long keys until the final string join.
-    l_str = vl.where(F.col(vla).isNotNull()).select(
-        F.col(vlk).alias("_lo"), F.col(vla).alias("_ls")
+    # band) on the original strings (joins/core.verify_strings)
+    pairs = verify_strings(
+        cand, prep_l, prep_r, view,
+        F.levenshtein(F.col("_ls"), F.col("_rs"), band).cast("double"),
+        (F.col("_sim_score") >= 0)
+        & COMP_OP_MAP[comp_op](F.col("_sim_score"), F.lit(float(threshold))),
+        self_join,
     )
-    r_str = vr.where(F.col(vra).isNotNull()).select(
-        F.col(vrk).alias("_ro"), F.col(vra).alias("_rs")
-    )
-    l_dec = prep_l.select(F.col("iid").alias("l_id"), F.col("id").alias("_lo"))
-    r_dec = prep_r.select(F.col("iid").alias("r_id"), F.col("id").alias("_ro"))
-    dist = F.levenshtein(F.col("_ls"), F.col("_rs"), band)
-    n_part = int(l_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    # pair-key repartition: uniform spread for the CPU-heavy banded
-    # levenshtein stage (AQE byte-based coalescing would otherwise
-    # shrink it to a handful of tasks)
-    scored = (
-        cand.repartition(n_part, "l_id", "r_id")
-        .join(l_dec, "l_id").join(r_dec, "r_id")
-        .join(l_str, "_lo").join(r_str, "_ro")
-        .withColumn("_sim_score", dist.cast("double"))
-        .where(
-            (F.col("_sim_score") >= 0)
-            & COMP_OP_MAP[comp_op](F.col("_sim_score"), F.lit(float(threshold)))
-        )
-    )
-    if self_join:
-        # iid-space pair orientation is arbitrary wrt the original
-        # ids; restore the canonical (least, greatest) orientation
-        sel = [F.least("_lo", "_ro").alias("l_id"),
-               F.greatest("_lo", "_ro").alias("r_id")]
-    else:
-        sel = [F.col("_lo").alias("l_id"), F.col("_ro").alias("r_id")]
-    pairs = scored.select(*sel, "_sim_score")
-    if use_dedup:
-        pairs = expand_gid_pairs(pairs, l_map, r_map, self_join)
-        if self_join:
-            pairs = pairs.unionByName(
-                diagonal_pairs(l_map, prep_l, EDIT_DISTANCE, threshold, comp_op,
-                               allow_empty=False)
-            )
-    if allow_missing:
-        pairs = pairs.unionByName(
-            missing_pairs(l_df, r_df, l_key_attr, r_key_attr, l_join_attr, r_join_attr,
-                          self_join=self_join)
-        )
-    return project_output(
-        pairs, l_df, r_df, l_key_attr, r_key_attr, l_out_attrs, r_out_attrs,
-        l_out_prefix, r_out_prefix, out_sim_score, dense_id,
+    return result_tail(
+        pairs, view, prep_l, prep_r, l_df, r_df, l_key_attr, r_key_attr,
+        l_join_attr, r_join_attr, l_out_attrs, r_out_attrs, l_out_prefix, r_out_prefix,
+        out_sim_score, dense_id, measure=EDIT_DISTANCE, threshold=threshold,
+        comp_op=comp_op, allow_empty=False, allow_missing=allow_missing,
+        self_join=self_join, metrics_out=None,
     )

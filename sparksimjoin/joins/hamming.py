@@ -46,13 +46,9 @@ from ..validation import validate_join_inputs
 from .core import (
     blocked_pairs,
     build_salt_map,
-    diagonal_pairs,
-    expand_gid_pairs,
-    missing_pairs,
-    project_output,
-    resolve_dedup,
+    dedup_view,
     resolve_salt_cap,
-    string_dedup_maps,
+    result_tail,
 )
 
 
@@ -111,16 +107,9 @@ def hamming_join(
     assert threshold >= 0, "hamming threshold must be >= 0"
     k = int(math.floor(threshold)) if comp_op in ("<=", "=") else max(int(math.ceil(threshold)) - 1, 0)
 
-    use_dedup = resolve_dedup(dedup_strings, l_df, r_df, l_join_attr, r_join_attr)
-    if use_dedup:
-        l_rep, r_rep, l_map, r_map = string_dedup_maps(
-            l_df, r_df, l_key_attr, r_key_attr, l_join_attr, r_join_attr
-        )
-        vl, vr, vlk, vrk, vla, vra = l_rep, r_rep, "__gid", "__gid", "__val", "__val"
-    else:
-        vl, vr, vlk, vrk, vla, vra = (
-            l_df, r_df, l_key_attr, r_key_attr, l_join_attr, r_join_attr
-        )
+    view = dedup_view(dedup_strings, l_df, r_df, l_key_attr, r_key_attr,
+                      l_join_attr, r_join_attr, None)
+    vl, vr, vlk, vrk, vla, vra = view.tables
     ex_l = _chunk_explode(vl, vlk, vla, "l", k)
     same = vlk == vrk and vla == vra and (vl is vr or vl.sameSemantics(vr))
     ex_r = (
@@ -161,25 +150,14 @@ def hamming_join(
         .where(COMP_OP_MAP[comp_op](F.col("_sim_score"), F.lit(float(threshold))))
     )
     pairs = scored.select("l_id", "r_id", "_sim_score")
-    if use_dedup:
-        pairs = expand_gid_pairs(pairs, l_map, r_map, self_join)
-        if self_join:
-            # identical strings: distance 0 (EDIT_DISTANCE's diagonal
-            # semantics apply verbatim; diagonal_pairs only needs an
-            # (id, size)-shaped frame for its membership join)
-            prep_like = l_rep.select(
-                F.col("__gid").alias("id"), F.length("__val").alias("size")
-            )
-            pairs = pairs.unionByName(
-                diagonal_pairs(l_map, prep_like, EDIT_DISTANCE, threshold, comp_op,
-                               allow_empty=False)
-            )
-    if allow_missing:
-        pairs = pairs.unionByName(
-            missing_pairs(l_df, r_df, l_key_attr, r_key_attr, l_join_attr, r_join_attr,
-                          self_join=self_join)
-        )
-    return project_output(
-        pairs, l_df, r_df, l_key_attr, r_key_attr, l_out_attrs, r_out_attrs,
-        l_out_prefix, r_out_prefix, out_sim_score, dense_id,
+    # identical strings (the dedup diagonal): distance 0, so
+    # EDIT_DISTANCE's diagonal semantics apply verbatim; the tail only
+    # needs an (id, size)-shaped frame for its membership join
+    sized = vl.select(F.col(vlk).alias("id"), F.length(vla).alias("size"))
+    return result_tail(
+        pairs, view, sized, sized, l_df, r_df, l_key_attr, r_key_attr,
+        l_join_attr, r_join_attr, l_out_attrs, r_out_attrs, l_out_prefix, r_out_prefix,
+        out_sim_score, dense_id, measure=EDIT_DISTANCE, threshold=threshold,
+        comp_op=comp_op, allow_empty=False, allow_missing=allow_missing,
+        self_join=self_join, metrics_out=None,
     )

@@ -57,16 +57,12 @@ from ..validation import validate_join_inputs
 from .core import (
     build_salt_map,
     candidate_pairs,
-    diagonal_pairs,
-    empty_pairs,
-    expand_gid_pairs,
-    missing_pairs,
+    dedup_view,
     prefix_explode,
     prepare_sides,
-    project_output,
-    resolve_dedup,
     resolve_salt_cap,
-    string_dedup_maps,
+    result_tail,
+    verify_strings,
 )
 
 # 1-gram bag: the blocking unit is the character multiset
@@ -127,17 +123,9 @@ def _jaro_join(
 
     # dedup key = the raw string (character ORDER matters for Jaro,
     # unlike the set measures' canonical-token-set key)
-    use_dedup = resolve_dedup(dedup_strings, l_df, r_df, l_join_attr, r_join_attr)
-    if use_dedup:
-        l_rep, r_rep, l_map, r_map = string_dedup_maps(
-            l_df, r_df, l_key_attr, r_key_attr, l_join_attr, r_join_attr
-        )
-        vl, vr, vlk, vrk, vla, vra = l_rep, r_rep, "__gid", "__gid", "__val", "__val"
-    else:
-        vl, vr, vlk, vrk, vla, vra = (
-            l_df, r_df, l_key_attr, r_key_attr, l_join_attr, r_join_attr
-        )
-    prep_l, prep_r, ranks = prepare_sides(vl, vr, vlk, vrk, vla, vra, _CHAR_TOK)
+    view = dedup_view(dedup_strings, l_df, r_df, l_key_attr, r_key_attr,
+                      l_join_attr, r_join_attr, None)
+    prep_l, prep_r, ranks = prepare_sides(*view.tables, _CHAR_TOK)
     ex_l = prefix_explode(prep_l, "l", JARO_CHAR, c)
     ex_r = prefix_explode(prep_r, "r", JARO_CHAR, c)
     salt_map = build_salt_map(ranks, resolve_salt_cap(salt_cap))
@@ -149,62 +137,24 @@ def _jaro_join(
         self_join=self_join, salt_map=salt_map, position_filter=True,
     )
 
-    # verify on the ORIGINAL strings: candidates carry iids; decode
-    # through the narrow prep projections (long keys), then fetch the
-    # two strings by original key — same shape as edit_distance_join's
-    # levenshtein stage, with the Arrow-batched Jaro kernel instead of
-    # the JVM builtin
-    l_str = vl.where(F.col(vla).isNotNull()).select(
-        F.col(vlk).alias("_lo"), F.col(vla).alias("_ls")
+    # verify on the ORIGINAL strings (joins/core.verify_strings, the
+    # stage edit_distance_join's levenshtein also runs through) with
+    # the Arrow-batched Jaro kernel
+    pairs = verify_strings(
+        cand, prep_l, prep_r, view,
+        (jaro_winkler_expr if winkler else jaro_expr)(F.col("_ls"), F.col("_rs")),
+        COMP_OP_MAP[comp_op](F.col("_sim_score"), F.lit(float(threshold))),
+        self_join,
     )
-    r_str = vr.where(F.col(vra).isNotNull()).select(
-        F.col(vrk).alias("_ro"), F.col(vra).alias("_rs")
-    )
-    l_dec = prep_l.select(F.col("iid").alias("l_id"), F.col("id").alias("_lo"))
-    r_dec = prep_r.select(F.col("iid").alias("r_id"), F.col("id").alias("_ro"))
-    sim = (jaro_winkler_expr if winkler else jaro_expr)(F.col("_ls"), F.col("_rs"))
-    n_part = int(l_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    # pair-key repartition: uniform spread for the CPU-heavy python
-    # kernel stage (AQE byte-based coalescing would otherwise shrink
-    # it to a handful of tasks)
-    scored = (
-        cand.repartition(n_part, "l_id", "r_id")
-        .join(l_dec, "l_id").join(r_dec, "r_id")
-        .join(l_str, "_lo").join(r_str, "_ro")
-        .withColumn("_sim_score", sim)
-        .where(COMP_OP_MAP[comp_op](F.col("_sim_score"), F.lit(float(threshold))))
-    )
-    if self_join:
-        sel = [F.least("_lo", "_ro").alias("l_id"),
-               F.greatest("_lo", "_ro").alias("r_id")]
-    else:
-        sel = [F.col("_lo").alias("l_id"), F.col("_ro").alias("r_id")]
-    pairs = scored.select(*sel, "_sim_score")
-
     # empty strings never enter the funnel (size 0 -> empty prefix);
-    # the classic convention scores empty-empty at 1.0
-    if allow_empty:
-        ep = empty_pairs(prep_l, prep_r, threshold, comp_op, self_join=self_join,
-                         metrics_out=metrics_out)
-        if ep is not None:
-            pairs = pairs.unionByName(ep)
-    if use_dedup:
-        pairs = expand_gid_pairs(pairs, l_map, r_map, self_join)
-        if self_join:
-            # identical strings: jaro/jw = 1.0 (JARO_CHAR routes
-            # diagonal_pairs to its sim-1.0 branch)
-            pairs = pairs.unionByName(
-                diagonal_pairs(l_map, prep_l, JARO_CHAR, threshold, comp_op,
-                               allow_empty)
-            )
-    if allow_missing:
-        pairs = pairs.unionByName(
-            missing_pairs(l_df, r_df, l_key_attr, r_key_attr, l_join_attr, r_join_attr,
-                          self_join=self_join)
-        )
-    return project_output(
-        pairs, l_df, r_df, l_key_attr, r_key_attr, l_out_attrs, r_out_attrs,
-        l_out_prefix, r_out_prefix, out_sim_score, dense_id,
+    # the classic convention scores empty-empty at 1.0, and identical
+    # strings (the dedup diagonal) score 1.0 under JARO_CHAR
+    return result_tail(
+        pairs, view, prep_l, prep_r, l_df, r_df, l_key_attr, r_key_attr,
+        l_join_attr, r_join_attr, l_out_attrs, r_out_attrs, l_out_prefix, r_out_prefix,
+        out_sim_score, dense_id, measure=JARO_CHAR, threshold=threshold,
+        comp_op=comp_op, allow_empty=allow_empty, allow_missing=allow_missing,
+        self_join=self_join, metrics_out=metrics_out,
     )
 
 

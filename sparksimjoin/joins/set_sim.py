@@ -22,7 +22,6 @@ with Spark-specific extras keyword-only:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .. import filter_math as fm
 from ..tokenizers import Tokenizer
@@ -35,19 +34,14 @@ from .core import (
     build_salt_map,
     candidate_pairs,
     canonical_set_key,
+    dedup_view,
     dense_band_pair_stats,
     dense_candidates,
-    diagonal_pairs,
-    empty_pairs,
-    expand_gid_pairs,
-    missing_pairs,
     plan_candidates,
     prefix_explode,
     prepare_sides,
-    project_output,
-    resolve_dedup,
     resolve_salt_cap,
-    string_dedup_maps,
+    result_tail,
     verify_pairs,
 )
 
@@ -134,22 +128,12 @@ def set_sim_join(
     # set sims depend only on the token SET, so the dedup key is the
     # canonical token set — strictly more collapsing than raw strings
     key_fn = lambda c: canonical_set_key(tok, c)  # noqa: E731
-    use_dedup = resolve_dedup(dedup_strings, l_df, r_df, l_join_attr, r_join_attr,
-                              key_fn=key_fn)
-    if use_dedup:
-        # exact-duplicate collapse: filter-verify runs on one
-        # representative per distinct token set; results expand back
-        # to record ids afterwards (duplication-factor^2 less work)
-        l_rep, r_rep, l_map, r_map = string_dedup_maps(
-            l_df, r_df, l_key_attr, r_key_attr, l_join_attr, r_join_attr, key_fn=key_fn
-        )
-        prep_l, prep_r, ranks = prepare_sides(
-            l_rep, r_rep, "__gid", "__gid", "__val", "__val", tok
-        )
-    else:
-        prep_l, prep_r, ranks = prepare_sides(
-            l_df, r_df, l_key_attr, r_key_attr, l_join_attr, r_join_attr, tok
-        )
+    # exact-duplicate collapse (joins/core.dedup_view): filter-verify
+    # runs on one representative per distinct token set; the result
+    # tail expands back to record ids (duplication-factor^2 less work)
+    view = dedup_view(dedup_strings, l_df, r_df, l_key_attr, r_key_attr,
+                      l_join_attr, r_join_attr, key_fn)
+    prep_l, prep_r, ranks = prepare_sides(*view.tables, tok)
     ex_l = prefix_explode(prep_l, "l", measure, threshold)
     ex_r = prefix_explode(prep_r, "r", measure, threshold)
     if stop_token_cap:
@@ -207,25 +191,12 @@ def set_sim_join(
                          orient_score=_verify_orient, tokens_join=tokens_join,
                          spread=not use_dense)
 
-    if allow_empty and measure != fm.OVERLAP:
-        ep = empty_pairs(prep_l, prep_r, v_threshold, comp_op, self_join=self_join,
-                         metrics_out=metrics_out)
-        if ep is not None:
-            pairs = pairs.unionByName(ep)
-    if use_dedup:
-        pairs = expand_gid_pairs(pairs, l_map, r_map, self_join)
-        if self_join:
-            pairs = pairs.unionByName(
-                diagonal_pairs(l_map, prep_l, measure, v_threshold, comp_op, allow_empty)
-            )
-    if allow_missing:
-        pairs = pairs.unionByName(
-            missing_pairs(l_df, r_df, l_key_attr, r_key_attr, l_join_attr, r_join_attr,
-                          self_join=self_join)
-        )
-    return project_output(
-        pairs, l_df, r_df, l_key_attr, r_key_attr, l_out_attrs, r_out_attrs,
-        l_out_prefix, r_out_prefix, out_sim_score, dense_id,
+    return result_tail(
+        pairs, view, prep_l, prep_r, l_df, r_df, l_key_attr, r_key_attr,
+        l_join_attr, r_join_attr, l_out_attrs, r_out_attrs, l_out_prefix, r_out_prefix,
+        out_sim_score, dense_id, measure=measure, threshold=v_threshold, comp_op=comp_op,
+        allow_empty=allow_empty and measure != fm.OVERLAP, allow_missing=allow_missing,
+        self_join=self_join, metrics_out=metrics_out,
     )
 
 

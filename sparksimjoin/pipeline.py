@@ -148,6 +148,21 @@ def tokens_checkpoint_bytes(ckpt: CheckpointManager, stage: str = "tokens") -> i
         return 0
 
 
+def tokens_join_strategy(
+    cfg: PipelineConfig, rows: int, mgrs: list[CheckpointManager]
+) -> str:
+    """``verify_pairs``' ``tokens_join`` for a scored stage whose token
+    table is the ``tokens`` stage of ``mgrs`` with ``rows`` records in
+    total: broadcast while the rows fit ``cfg.tokens_broadcast_cap``
+    and the summed parquet bytes, times TOKENS_BROADCAST_EXPANSION,
+    fit ``cfg.tokens_broadcast_bytes_cap``; shuffle-hash otherwise.
+    The bytes are only listed when the row cap passes."""
+    fits = rows <= cfg.tokens_broadcast_cap and sum(
+        tokens_checkpoint_bytes(m) for m in mgrs
+    ) * TOKENS_BROADCAST_EXPANSION <= cfg.tokens_broadcast_bytes_cap
+    return "broadcast" if fits else "shuffle_hash"
+
+
 def tokenizer_descriptor(cfg: PipelineConfig) -> str:
     """Stable textual identity of the configured tokenizer, recorded
     in the candidates manifest so incremental batches can verify they
@@ -401,11 +416,7 @@ def _run_stages(
         # broadcast-vs-SMJ choice to Catalyst's mid-plan estimate
         # (see PipelineConfig.tokens_broadcast_cap for the cliff this
         # dodges)
-        n_rec = ckpt.manifest("tokens")["rows"]
-        fits = n_rec <= cfg.tokens_broadcast_cap and tokens_checkpoint_bytes(
-            ckpt
-        ) * TOKENS_BROADCAST_EXPANSION <= cfg.tokens_broadcast_bytes_cap
-        strategy = "broadcast" if fits else "shuffle_hash"
+        strategy = tokens_join_strategy(cfg, ckpt.manifest("tokens")["rows"], [ckpt])
         # spread=False: the candidates checkpoint was WRITTEN from the
         # distinct's hash-partitioned output (unique pair keys ->
         # uniform files) and parquet reads re-split by

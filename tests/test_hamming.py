@@ -45,16 +45,19 @@ def _assert_match(got, expected, ctx):
             assert g is not None and math.isclose(g, v, abs_tol=1e-12), (ctx, k, g, v)
 
 
-@pytest.mark.parametrize("k", [0, 1, 3])
-def test_parity_two_table(tables, k):
+@pytest.mark.parametrize(
+    "k,dedup", [(0, "auto"), (1, "auto"), (3, "auto"), (1, True)], ids=["0", "1", "3", "1-dedup"]
+)
+def test_parity_two_table(tables, k, dedup):
     a, b = tables
     got = _collect(
-        hamming_join(a, b, "id", "id", "name", "name", k, allow_missing=True)
+        hamming_join(a, b, "id", "id", "name", "name", k, allow_missing=True,
+                     dedup_strings=dedup)
     )
     exp = {(l, r): s for l, r, s in naive_hamming_join(
         A_PDF, B_PDF, "id", "id", "name", "name", k, allow_missing=True
     )}
-    _assert_match(got, exp, f"hamming k={k}")
+    _assert_match(got, exp, f"hamming k={k} dedup={dedup}")
 
 
 @pytest.mark.parametrize("dedup", [True, False])

@@ -94,18 +94,24 @@ def _assert_match(got, expected, ctx):
             assert g is not None and math.isclose(g, v, rel_tol=0, abs_tol=1e-12), (ctx, k, g, v)
 
 
-@pytest.mark.parametrize("winkler,threshold", [(True, 0.85), (True, 0.9), (False, 0.7), (False, 0.8)])
-def test_join_parity_two_table(tables, winkler, threshold):
+@pytest.mark.parametrize(
+    "winkler,threshold,dedup",
+    [(True, 0.85, "auto"), (True, 0.9, "auto"), (False, 0.7, "auto"), (False, 0.8, "auto"),
+     (False, 0.7, True)],
+    ids=["True-0.85", "True-0.9", "False-0.7", "False-0.8", "False-0.7-dedup"],
+)
+def test_join_parity_two_table(tables, winkler, threshold, dedup):
     a, b = tables
     fn = jaro_winkler_join if winkler else jaro_join
     got = _collect(
-        fn(a, b, "id", "id", "name", "name", threshold, allow_missing=True)
+        fn(a, b, "id", "id", "name", "name", threshold, allow_missing=True,
+           dedup_strings=dedup)
     )
     exp = _expected(
         naive_jaro_join(A_PDF, B_PDF, "id", "id", "name", "name", threshold,
                         winkler=winkler, allow_missing=True)
     )
-    _assert_match(got, exp, f"jaro(winkler={winkler}, t={threshold})")
+    _assert_match(got, exp, f"jaro(winkler={winkler}, t={threshold}, dedup={dedup})")
 
 
 @pytest.mark.parametrize("dedup", [True, False])
