@@ -2906,7 +2906,7 @@ SELECT (SELECT CAST(count(*) AS BIGINT) FROM tok) AS n_left,
 """,
         # cap advisor: overlap-coefficient prefix = the FULL token
         # set, so pref == ex and pdf == global df; stop list = df >
-        # cap (the join's stop_token_frame definition); lost_pairs_ub
+        # cap (the join's exclude_stop_tokens definition); lost_pairs_ub
         # = least(volume reduction, pairs among records with >= 1
         # capped token) — both bounds sound, see estimate.py
         "cap_advisor_doc": f"""

@@ -292,7 +292,7 @@ def _lsh_scored_candidates(
         # tbl=-1 sentinel (real tbl >= 0): keeps the broadcast
         # non-empty when NO bucket exceeds the cap, else AQE's
         # empty-relation propagation deletes the anti-join and the
-        # CollectMetrics node with it (stop_token_frame precedent)
+        # CollectMetrics node with it (exclude_stop_tokens precedent)
         sentinel = buckets.sparkSession.range(1).select(
             F.lit(-1).cast("int").alias("tbl"),
             F.lit(-1).cast("long").alias("sig"),

@@ -85,7 +85,7 @@ def estimate_join_cost(
     - ``stop_token_cap``: the proposed cap, echoed,
     - ``capped_tokens``: tokens the join would exclude from blocking
       keys (document frequency > cap — the join's own stop-list
-      definition, joins/core.stop_token_frame),
+      definition, joins/core.exclude_stop_tokens),
     - ``est_candidates_capped``: exact candidate meetings AFTER the
       cap — ``est_candidates - est_candidates_capped`` is the exact
       volume reduction the cap buys,
@@ -184,7 +184,7 @@ def estimate_join_cost(
         return out.select(*base_cols)
 
     # ---- cap advisory (docstring): all still token-level linear ----
-    # the join's own stop-list definition (joins/core.stop_token_frame):
+    # the join's own stop-list definition (joins/core.exclude_stop_tokens):
     # GLOBAL document frequency (ranks.cnt) above the cap
     stop = ranks.where(F.col("cnt") > stop_token_cap).select(
         F.col("tid").alias("token")

@@ -45,10 +45,19 @@ rows plus a manifest pointer to its base, and readers walk the chain
 relative to the corpus) and the cluster assignment (one row per
 conversation) are written in full per batch.
 
-Config invariants: measure/threshold/comp_op must match the base
-run's (validated against the base candidates manifest — a mixed-
-threshold edge set would be meaningless); the tokenizer must be the
-one the base run used (recorded/validated via its descriptor).
+Config invariants: the batch must run under the base's linkage
+identity — measure, threshold, tokenizer descriptor, stop_token_cap
+and time_window_seconds from the base's candidates manifest, comp_op
+from its scored manifest (pipeline.stage_params; a mixed-threshold or
+mixed-cap edge set would be meaningless). Batches record the same
+keys, None included, so the check holds along a chain too.
+
+Tokenization, the candidate id-space check, the CC round hook and
+the all-ids labelling step are pipeline.py's stage helpers; this
+module keeps what is batch-specific: the frozen-vocabulary
+extension, the base-chain walk with its iid namespaces, the
+new x base candidate join with its broadcast base prune, and
+star-seeded clustering.
 """
 
 from __future__ import annotations
@@ -66,6 +75,7 @@ from .joins.core import (
     candidate_pairs,
     dense_rank_tids,
     ensure_iid,
+    exclude_stop_tokens,
     iid_tag,
     order_tokens,
     prefix_explode,
@@ -74,8 +84,13 @@ from .joins.core import (
 )
 from .pipeline import (
     PipelineConfig,
+    candidate_id_space,
+    cc_round_hook,
+    label_components,
     prepare_records,
-    tokenizer_descriptor,
+    record_tokens,
+    stage_param_drift,
+    stage_params,
     tokens_join_strategy,
 )
 
@@ -135,25 +150,19 @@ def _require_base_stages(base: CheckpointManager) -> None:
 
 
 def _validate_config(base: CheckpointManager, cfg: PipelineConfig) -> None:
-    m = base.manifest("candidates")
-    # key-presence (not is-not-None) so stop_token_cap=None recorded
-    # by a capless base still conflicts with a capped batch config;
-    # keys absent entirely (pre-upgrade manifests) are skipped
-    for key, got in (("measure", cfg.measure), ("threshold", cfg.threshold),
-                     ("stop_token_cap", cfg.stop_token_cap),
-                     ("time_window_seconds", cfg.time_window_seconds)):
-        if key in m and m[key] != got:
+    """The batch's candidates and scored identity
+    (pipeline.stage_params) must match what the base recorded — a
+    recorded None conflicts with a set value, so a capped batch on an
+    uncapped base fails too."""
+    for stage, expected in stage_params(cfg).items():
+        drift = stage_param_drift(base, stage, expected)
+        if drift:
+            key, was, got = drift
             raise ValueError(
-                f"incremental config mismatch: base run used {key}={m[key]!r}, "
+                f"incremental config mismatch: base run used {key}={was!r}, "
                 f"got {got!r} — an edge set mixing thresholds/measures is not "
                 "a valid linkage; rerun the base or match its config"
             )
-    want_tok = m.get("tokenizer")
-    if want_tok is not None and want_tok != tokenizer_descriptor(cfg):
-        raise ValueError(
-            f"incremental config mismatch: base run tokenizer {want_tok}, "
-            f"got {tokenizer_descriptor(cfg)}"
-        )
 
 
 def run_incremental(
@@ -244,17 +253,9 @@ def _run_stages(
         per_link=lambda df, d: iid_tag(ensure_iid(df), d + 1),
     )
 
-    def _tok_df() -> DataFrame:
-        tok = cfg.tokenizer.with_return_set(True)
-        return records_new.select(
-            F.col("conv_id").alias("id"),
-            F.length("doc").alias("strlen"),
-            tok.spark_expr(F.col("doc")).alias("toks"),
-        ).where(F.col("doc").isNotNull())
-
     def _ranks_ext() -> DataFrame:
         new_counts = (
-            _tok_df().select(F.explode("toks").alias("token"))
+            record_tokens(records_new, cfg).select(F.explode("toks").alias("token"))
             .groupBy("token").agg(F.count("*").alias("cnt"))
         )
         # frozen base order, combined doc frequencies (cnt only feeds
@@ -275,14 +276,12 @@ def _run_stages(
     )
 
     tokens_new = ensure_iid(ckpt.get_or_compute(
-        "tokens", lambda: order_tokens(_tok_df(), ranks),
+        "tokens", lambda: order_tokens(record_tokens(records_new, cfg), ranks),
         inputs=["records", "token_ranks"], extra={"base": base.root},
     ))
 
-    cand_extra = {
-        "measure": cfg.measure, "threshold": cfg.threshold,
-        "tokenizer": tokenizer_descriptor(cfg), "base": base.root,
-    }
+    params = stage_params(cfg)
+    cand_extra = {**params["candidates"], "base": base.root}
 
     def _candidates() -> DataFrame:
         # base x base pairs were fully explored by the base run; the
@@ -304,7 +303,7 @@ def _run_stages(
         # Exact: never drops a joinable posting (test_incremental
         # asserts batch+base == full-recompute byte-identical). The -2
         # sentinel (no real tid is negative) keeps the broadcast non-
-        # empty (same trick as stop_token_frame); the vocab size rides
+        # empty (same trick as exclude_stop_tokens); the vocab size rides
         # the candidates write as a lazy observed metric. AQE's
         # empty-relation propagation can still delete the whole
         # CollectMetrics subtree when the (new x base) join output is
@@ -329,21 +328,11 @@ def _run_stages(
                 return ex_new_l.select("token").distinct().count()
 
         cand_extra["batch_prefix_vocab"] = _vocab_metric
-        tid_freq = ranks.select(F.col("tid").alias("token"), "cnt")
         if cfg.stop_token_cap:
-            from .joins.core import stop_token_frame
-
-            stop_b, obs = stop_token_frame(tid_freq, cfg.stop_token_cap,
-                                           key_col="token")
-            ex_new_l = ex_new_l.join(stop_b, "token", "left_anti")
-            ex_new_r = ex_new_r.join(stop_b, "token", "left_anti")
-            ex_base_r = ex_base_r.join(stop_b, "token", "left_anti")
-            cand_extra["stop_token_cap"] = cfg.stop_token_cap
-            cand_extra["dropped_stop_tokens"] = (
-                lambda: int(obs.get["dropped_stop_tokens"])
-            )
-        salt_map = build_salt_map(tid_freq, resolve_salt_cap(cfg.salt_cap),
-                                  key_col="token")
+            (ex_new_l, ex_new_r, ex_base_r), dropped = exclude_stop_tokens(
+                ranks, cfg.stop_token_cap, ex_new_l, ex_new_r, ex_base_r)
+            cand_extra["dropped_stop_tokens"] = dropped.resolve
+        salt_map = build_salt_map(ranks, resolve_salt_cap(cfg.salt_cap))
         cand_nn = candidate_pairs(
             ex_new_l, ex_new_r, cfg.measure, cfg.threshold, self_join=True,
             salt_map=salt_map,
@@ -368,18 +357,10 @@ def _run_stages(
         # >= 10 GiB) Spark's runtime bloom-filter injection
         # (spark.sql.optimizer.runtime.bloomFilter.enabled, default
         # on) builds a bloom from the materialized candidates side
-        # and prunes the base scan before the shuffle
-        from pyspark.sql.types import LongType
-
-        # iid-space candidates (long l_id; conv ids are strings) vs
-        # pre-iid checkpoints (string pairs). The r-side prep union is
-        # collision-free: base links carry depth+1 namespaces, the new
-        # batch ns 0.
-        id_space = (
-            "iid"
-            if isinstance(candidates.schema["l_id"].dataType, LongType)
-            else "id"
-        )
+        # and prunes the base scan before the shuffle. The r-side prep
+        # union is collision-free: base links carry depth+1
+        # namespaces, the new batch ns 0.
+        id_space = candidate_id_space(candidates)
         # same verify-stage cliff dodge as the batch pipeline
         # (pipeline.py _scored / PipelineConfig.tokens_broadcast_cap):
         # never leave the token-lookup strategy to Catalyst's mid-plan
@@ -404,7 +385,8 @@ def _run_stages(
         )
 
     scored = ckpt.get_or_compute(
-        "scored", _scored, inputs=["candidates", "tokens"], extra={"base": base.root},
+        "scored", _scored, inputs=["candidates", "tokens"],
+        extra={**params["scored"], "base": base.root},
     )
 
     def _clusters() -> DataFrame:
@@ -417,25 +399,13 @@ def _run_stages(
             F.col("conv_id").alias("l_id"), F.col("component").alias("r_id")
         )
         edges = scored.select("l_id", "r_id").unionByName(star)
-
-        def round_ckpt(df: DataFrame, rnd: int) -> DataFrame:
-            return ckpt.write(df, f"cc_round_{rnd}", inputs=["scored"])
-
         comp = connected_components(
             edges, "l_id", "r_id", max_rounds=cfg.max_cc_rounds,
-            # durable rounds opt-in, as in the batch pipeline
-            # (PipelineConfig.cc_round_artifacts rationale)
-            round_checkpoint=round_ckpt if cfg.cc_round_artifacts else None,
+            round_checkpoint=cc_round_hook(cfg, ckpt),
         )
-        all_ids = records_base.select("conv_id").unionByName(
-            records_new.select("conv_id")
-        )
-        return (
-            all_ids.join(comp, comp["id"] == all_ids["conv_id"], "left")
-            .select(
-                "conv_id",
-                F.coalesce("component", F.col("conv_id")).alias("component"),
-            )
+        return label_components(
+            records_base.select("conv_id").unionByName(records_new.select("conv_id")),
+            comp,
         )
 
     clusters = ckpt.get_or_compute(

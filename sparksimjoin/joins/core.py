@@ -149,23 +149,30 @@ class LazyCountMetric:
         return "LazyCountMetric()"
 
 
-def stop_token_frame(ranks: DataFrame, cap: int, key_col: str = "tid"):
-    """-> (broadcastable stop-token frame, Observation) for the lossy
-    ``stop_token_cap`` blocking-key exclusion. The dropped-token count
-    rides the consuming query's OWN action via an Observation (no
-    eager count job). A -1 sentinel row (no real token id is negative)
-    keeps the broadcast non-empty even when NO token exceeds the cap —
-    otherwise AQE's empty-relation propagation deletes the anti-join
-    and the CollectMetrics node with it, and the metric never fires."""
+def exclude_stop_tokens(ranks: DataFrame, cap: int, *frames: DataFrame):
+    """-> (frames, dropped): the lossy ``stop_token_cap`` blocking-key
+    exclusion. Every exploded frame in ``frames`` is left-anti-joined
+    against one broadcast list of the ``ranks`` tids whose doc
+    frequency exceeds ``cap``; ``dropped`` is a
+    :class:`LazyObservedMetric` over the list's size, collected by the
+    consuming query's OWN action (no eager count job). A -1 sentinel
+    row (no real token id is negative) keeps the broadcast non-empty
+    even when NO token exceeds the cap — otherwise AQE's empty-relation
+    propagation deletes the anti-join and the CollectMetrics node with
+    it, and the metric never fires."""
     from pyspark.sql import Observation
 
-    stop = ranks.where(F.col("cnt") > cap).select(F.col(key_col).alias("token"))
+    stop = ranks.where(F.col("cnt") > cap).select(F.col("tid").alias("token"))
     obs = Observation()
     observed = stop.observe(obs, F.count(F.lit(1)).alias("dropped_stop_tokens"))
     sentinel = (
         ranks.sparkSession.range(1).select(F.lit(-1).cast("bigint").alias("token"))
     )
-    return F.broadcast(observed.unionAll(sentinel)), obs
+    stop_b = F.broadcast(observed.unionAll(sentinel))
+    return (
+        tuple(f.join(stop_b, "token", "left_anti") for f in frames),
+        LazyObservedMetric(obs, "dropped_stop_tokens"),
+    )
 
 
 # sub-bucket prefix length for the deterministic dense rank below:
@@ -950,8 +957,8 @@ def build_salt_map(ranks: DataFrame, salt_cap: int, key_col: str = "tid") -> Dat
     """Tokens whose doc frequency exceeds ``salt_cap`` get
     ``nsalts = ceil(cnt / salt_cap)`` splits. The result is tiny
     (hot tokens only) and broadcast. ``key_col`` names the blocking
-    key in ``ranks`` (tid from prepare_sides; already-encoded token
-    ids in the pipeline's recomputed frequency table)."""
+    key in ``ranks`` (tid in a token-rank table; the raw blocking key
+    in blocking.py's and hamming.py's frequency tables)."""
     return (
         ranks.where(F.col("cnt") > salt_cap)
         .select(

@@ -37,6 +37,7 @@ from .core import (
     dedup_view,
     dense_band_pair_stats,
     dense_candidates,
+    exclude_stop_tokens,
     plan_candidates,
     prefix_explode,
     prepare_sides,
@@ -137,20 +138,12 @@ def set_sim_join(
     ex_l = prefix_explode(prep_l, "l", measure, threshold)
     ex_r = prefix_explode(prep_r, "r", measure, threshold)
     if stop_token_cap:
-        from .core import LazyObservedMetric, stop_token_frame
-
-        # dropped-token count rides the join's own action via an
-        # Observation on the broadcast stop list — no separate eager
-        # count job during plan construction (stop_token_frame's
-        # sentinel keeps the anti-join AQE-prune-proof)
-        stop_b, obs = stop_token_frame(ranks, stop_token_cap)
-        ex_l = ex_l.join(stop_b, "token", "left_anti")
-        ex_r = ex_r.join(stop_b, "token", "left_anti")
+        # the dropped-token count rides the join's own action
+        # (joins/core.exclude_stop_tokens) — no eager count job
+        (ex_l, ex_r), dropped = exclude_stop_tokens(ranks, stop_token_cap, ex_l, ex_r)
         if metrics_out is not None:
             metrics_out["stop_token_cap"] = stop_token_cap
-            metrics_out["dropped_stop_tokens"] = LazyObservedMetric(
-                obs, "dropped_stop_tokens"
-            )
+            metrics_out["dropped_stop_tokens"] = dropped
     # validate salt_cap up front, whichever candidate path runs: the
     # dense path never salts, but a nonsensical cap must still fail
     # loudly (the falsy-coercion contract test)

@@ -17,7 +17,17 @@
 
 Every stage is checkpointed through CheckpointManager with
 per-partition counters + lineage, and re-entry skips completed stages
-(kill/resume equivalence is tested in tests/test_pipeline.py).
+(kill/resume equivalence is tested in tests/test_pipeline.py). The
+candidates and scored manifests record the config that identifies
+them (:func:`stage_params`); a resume under different config fails
+loudly instead of reading back stale stages.
+
+This module also holds the stage helpers that incremental.py's batch
+driver shares: :func:`record_tokens`, :func:`stage_params` with
+:func:`stage_param_drift`, :func:`candidate_id_space`,
+:func:`cc_round_hook`, :func:`label_components` and
+:func:`tokens_join_strategy`. Stop-token exclusion is
+joins/core.exclude_stop_tokens, the one used by every blocked funnel.
 """
 
 from __future__ import annotations
@@ -26,6 +36,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from .cache import scoped_caches
 from .checkpoint import CheckpointManager
@@ -36,8 +47,11 @@ from .joins.core import (
     build_token_ranks,
     candidate_pairs,
     ensure_iid,
+    exclude_stop_tokens,
     order_tokens,
     prefix_explode,
+    resolve_salt_cap,
+    tokenize_table,
     verify_pairs,
 )
 from .tokenizers import Tokenizer, WhitespaceTokenizer
@@ -171,6 +185,28 @@ def tokenizer_descriptor(cfg: PipelineConfig) -> str:
     return f"{type(t).__name__}:{sorted(vars(t).items())!r}"
 
 
+def stage_params(cfg: PipelineConfig) -> dict[str, dict]:
+    """-> {stage: params} — the config that identifies the
+    ``candidates`` and ``scored`` stages of a linkage run. Both drivers
+    record these in the stage manifests (``stop_token_cap`` and
+    ``time_window_seconds`` even when None, so turning one on later is
+    caught). A resume checks them against its own workdir
+    (:func:`_check_stage_params`) and an incremental batch against its
+    base (incremental._validate_config). ``salt_cap`` is deliberately
+    absent: it is an output-equivalent plan knob (losslessness
+    tested), so a different value reads back identical candidates."""
+    return {
+        "candidates": {
+            "measure": cfg.measure, "threshold": cfg.threshold,
+            "tokenizer": tokenizer_descriptor(cfg),
+            # the cap is lossy and the window semantic: candidates differ
+            "stop_token_cap": cfg.stop_token_cap,
+            "time_window_seconds": cfg.time_window_seconds,
+        },
+        "scored": {"comp_op": cfg.comp_op},
+    }
+
+
 def validate_refine_config(cfg: PipelineConfig) -> None:
     """``refine_max_size``/``refine_min_density`` are criteria FOR the
     refinement stage; without ``refine_threshold`` no stage runs, so
@@ -187,6 +223,22 @@ def validate_refine_config(cfg: PipelineConfig) -> None:
         )
 
 
+def stage_param_drift(ckpt: CheckpointManager, stage: str,
+                      expected: dict) -> tuple | None:
+    """-> the first ``(key, recorded, expected)`` on which ``stage``'s
+    manifest disagrees with ``expected``; None when they agree or the
+    stage does not exist. Keys absent from the manifest (pre-upgrade
+    checkpoints) are skipped."""
+    if not ckpt.exists(stage):
+        return None
+    m = ckpt.manifest(stage)
+    return next(
+        ((key, m[key], got) for key, got in expected.items()
+         if key in m and m[key] != got),
+        None,
+    )
+
+
 def _check_stage_params(ckpt: CheckpointManager, stage: str,
                         expected: dict) -> None:
     """Resume safety: ``get_or_compute`` reads an existing stage back
@@ -194,19 +246,16 @@ def _check_stage_params(ckpt: CheckpointManager, stage: str,
     config would silently return results computed under the OLD
     config (the natural tuning workflow — change a threshold, rerun).
     Compare the stage manifest's recorded params against the current
-    config and fail loudly on drift. Keys absent from the manifest
-    (pre-upgrade checkpoints) are skipped."""
-    if not ckpt.exists(stage):
-        return
-    m = ckpt.manifest(stage)
-    for key, got in expected.items():
-        if key in m and m[key] != got:
-            raise ValueError(
-                f"resume config mismatch on stage {stage!r}: checkpoint "
-                f"was built with {key}={m[key]!r}, current config has "
-                f"{got!r} — delete the stage (and its dependents) or use "
-                "a fresh workdir to re-run under the new config"
-            )
+    config and fail loudly on drift."""
+    drift = stage_param_drift(ckpt, stage, expected)
+    if drift:
+        key, was, got = drift
+        raise ValueError(
+            f"resume config mismatch on stage {stage!r}: checkpoint "
+            f"was built with {key}={was!r}, current config has "
+            f"{got!r} — delete the stage (and its dependents) or use "
+            "a fresh workdir to re-run under the new config"
+        )
 
 
 def prepare_records(transcripts: DataFrame) -> DataFrame:
@@ -234,6 +283,44 @@ def prepare_records(transcripts: DataFrame) -> DataFrame:
             F.concat_ws(" ", F.transform("_turns", lambda x: x["text"])).alias("doc"),
             F.size("_turns").alias("n_turns"),
             "min_ts_us",
+        )
+    )
+
+
+def record_tokens(records: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """(id, strlen, toks) of a records stage under the configured
+    tokenizer, coerced to token sets (both drivers' token_ranks and
+    tokens stages)."""
+    return tokenize_table(records, "conv_id", "doc", cfg.tokenizer.with_return_set(True))
+
+
+def candidate_id_space(candidates: DataFrame) -> str:
+    """``verify_pairs``' ``id_space`` for a candidates checkpoint: conv
+    ids are strings, so a long ``l_id`` unambiguously marks iid-space
+    pairs; pre-iid checkpoints (string pairs) resume through the
+    original-id join path."""
+    return "iid" if isinstance(candidates.schema["l_id"].dataType, LongType) else "id"
+
+
+def cc_round_hook(cfg: PipelineConfig, ckpt: CheckpointManager):
+    """``connected_components``' ``round_checkpoint``: a durable
+    ``cc_round_N`` stage per star round when ``cfg.cc_round_artifacts``
+    is set, else None (localCheckpoint lineage truncation only; see
+    PipelineConfig.cc_round_artifacts)."""
+    if not cfg.cc_round_artifacts:
+        return None
+    return lambda df, rnd: ckpt.write(df, f"cc_round_{rnd}", inputs=["scored"])
+
+
+def label_components(all_ids: DataFrame, comp: DataFrame) -> DataFrame:
+    """-> (conv_id, component) for every row of ``all_ids``: the
+    (id, component) assignment left-joined on, and records without an
+    edge are singletons labelled by their own conv_id."""
+    return (
+        all_ids.join(comp, comp["id"] == all_ids["conv_id"], "left")
+        .select(
+            "conv_id",
+            F.coalesce("component", F.col("conv_id")).alias("component"),
         )
     )
 
@@ -306,16 +393,12 @@ def _run_stages(
     cfg: PipelineConfig,
     ckpt: CheckpointManager,
 ) -> DataFrame:
+    # resume safety: fail on config drift before reading anything back
+    params = stage_params(cfg)
+    for stage, expected in params.items():
+        _check_stage_params(ckpt, stage, expected)
     records = ckpt.get_or_compute("records", lambda: prepare_records(transcripts),
                                   inputs=["transcripts"])
-
-    def _tok_df() -> DataFrame:
-        tok = cfg.tokenizer.with_return_set(True)
-        return records.select(
-            F.col("conv_id").alias("id"),
-            F.length("doc").alias("strlen"),
-            tok.spark_expr(F.col("doc")).alias("toks"),
-        ).where(F.col("doc").isNotNull())
 
     # the (token, cnt, tid) vocabulary is durably checkpointed as its
     # own stage: incremental batches (incremental.py) need the string
@@ -324,65 +407,38 @@ def _run_stages(
     # `rows` == vocabulary size == max_tid + 1 (tid is a 0-based dense
     # rank), which is how incremental runs derive the append offset
     # without an extra driver job.
-    ranks = ckpt.get_or_compute("token_ranks", lambda: build_token_ranks([_tok_df()]),
-                                inputs=["records"])
+    ranks = ckpt.get_or_compute(
+        "token_ranks", lambda: build_token_ranks([record_tokens(records, cfg)]),
+        inputs=["records"],
+    )
     # ensure_iid: tokens stages checkpointed before the iid funnel
     # lack the surrogate-id column; the re-derivation is deterministic
     # (with_iid docstring), so a resumed old workdir gets exactly the
     # iids a fresh run would
     tokens = ensure_iid(
-        ckpt.get_or_compute("tokens", lambda: order_tokens(_tok_df(), ranks),
+        ckpt.get_or_compute("tokens",
+                            lambda: order_tokens(record_tokens(records, cfg), ranks),
                             inputs=["records", "token_ranks"])
     )
 
-    cand_extra = {"measure": cfg.measure, "threshold": cfg.threshold,
-                  "tokenizer": tokenizer_descriptor(cfg),
-                  # recorded even when None so a later resume that
-                  # TURNS THE CAP ON is caught by _check_stage_params
-                  # (the cap is lossy — candidates differ)
-                  "stop_token_cap": cfg.stop_token_cap,
-                  "time_window_seconds": cfg.time_window_seconds,
-                  # candidate pairs are stored as iid surrogate longs
-                  # (decoded to conv ids by the scored stage's prep
-                  # joins); the scored stage detects pre-iid
-                  # checkpoints by the stored l_id dtype
-                  "id_space": "iid64"}
-    # salt_cap is deliberately NOT compared: it is an output-equivalent
-    # plan knob (losslessness tested), so resuming under a different
-    # value reads back identical candidates
-    _check_stage_params(ckpt, "candidates", {
-        "measure": cfg.measure, "threshold": cfg.threshold,
-        "tokenizer": tokenizer_descriptor(cfg),
-        "stop_token_cap": cfg.stop_token_cap,
-        "time_window_seconds": cfg.time_window_seconds,
-    })
+    # candidate pairs are stored as iid surrogate longs (decoded to
+    # conv ids by the scored stage's prep joins); the scored stage
+    # detects pre-iid checkpoints by the stored l_id dtype
+    cand_extra = {**params["candidates"], "id_space": "iid64"}
 
     def _candidates() -> DataFrame:
         ex_l = prefix_explode(tokens, "l", cfg.measure, cfg.threshold)
         ex_r = prefix_explode(tokens, "r", cfg.measure, cfg.threshold)
-        # tid doc frequencies come straight from the checkpointed
-        # vocabulary (cnt rides along with tid) — the previous
-        # explode+groupBy re-scan of the tokens stage was redundant
-        tid_freq = ranks.select(F.col("tid").alias("token"), "cnt")
+        # the stop list and the salt map read tid doc frequencies
+        # straight off the checkpointed vocabulary (cnt rides with tid)
         if cfg.stop_token_cap:
-            from .joins.core import stop_token_frame
-
-            # dropped-token count rides the stage's checkpoint write
-            # (the action) via an Observation; the callable extra is
-            # resolved by the manifest builder AFTER that action — no
-            # separate eager count job in the capped path
-            stop_b, obs = stop_token_frame(tid_freq, cfg.stop_token_cap,
-                                           key_col="token")
-            ex_l = ex_l.join(stop_b, "token", "left_anti")
-            ex_r = ex_r.join(stop_b, "token", "left_anti")
-            cand_extra["stop_token_cap"] = cfg.stop_token_cap
-            cand_extra["dropped_stop_tokens"] = (
-                lambda: int(obs.get["dropped_stop_tokens"])
-            )
-        from .joins.core import resolve_salt_cap
-
-        salt_map = build_salt_map(tid_freq, resolve_salt_cap(cfg.salt_cap),
-                                  key_col="token")
+            # the dropped-token count rides the stage's checkpoint
+            # write; the callable extra is resolved by the manifest
+            # builder AFTER that action — no eager count job
+            (ex_l, ex_r), dropped = exclude_stop_tokens(ranks, cfg.stop_token_cap,
+                                                        ex_l, ex_r)
+            cand_extra["dropped_stop_tokens"] = dropped.resolve
+        salt_map = build_salt_map(ranks, resolve_salt_cap(cfg.salt_cap))
         cand = candidate_pairs(
             ex_l, ex_r, cfg.measure, cfg.threshold, self_join=True, salt_map=salt_map,
         )
@@ -395,16 +451,7 @@ def _run_stages(
     )
 
     def _scored() -> DataFrame:
-        from pyspark.sql.types import LongType
-
-        # conv ids are strings, so a long l_id unambiguously marks an
-        # iid-space candidates checkpoint; pre-iid checkpoints (string
-        # pairs) resume through the original-id join path
-        id_space = (
-            "iid"
-            if isinstance(candidates.schema["l_id"].dataType, LongType)
-            else "id"
-        )
+        id_space = candidate_id_space(candidates)
         # keep_iids: the scored checkpoint carries the dense-long pair
         # alongside the decoded conv ids so the clusters stage's
         # O(log n) star-contraction rounds shuffle 8-byte longs, not
@@ -429,19 +476,12 @@ def _run_stages(
                             keep_iids=id_space == "iid", tokens_join=strategy,
                             spread=False)
 
-    scored = ckpt.get_or_compute("scored", _scored, inputs=["candidates", "tokens"])
+    scored = ckpt.get_or_compute("scored", _scored, inputs=["candidates", "tokens"],
+                                 extra=params["scored"])
 
     def _clusters() -> DataFrame:
         stats = CCStats()
-
-        def round_ckpt(df: DataFrame, rnd: int) -> DataFrame:
-            return ckpt.write(df, f"cc_round_{rnd}", inputs=["scored"])
-
-        if not cfg.cc_round_artifacts:
-            # localCheckpoint lineage truncation only (see
-            # PipelineConfig.cc_round_artifacts)
-            round_ckpt = None  # noqa: F811
-
+        round_ckpt = cc_round_hook(cfg, ckpt)
         if "l_iid" in scored.columns:
             # iid-space contraction: every star round (and its durable
             # cc_round checkpoint) moves 8-byte longs. Decode + relabel
@@ -467,14 +507,7 @@ def _run_stages(
                 scored, "l_id", "r_id", max_rounds=cfg.max_cc_rounds,
                 round_checkpoint=round_ckpt, stats=stats,
             )
-        all_ids = records.select(F.col("conv_id"))
-        return (
-            all_ids.join(comp, comp["id"] == all_ids["conv_id"], "left")
-            .select(
-                "conv_id",
-                F.coalesce("component", F.col("conv_id")).alias("component"),
-            )
-        )
+        return label_components(records.select(F.col("conv_id")), comp)
 
     clusters = ckpt.get_or_compute("clusters", _clusters, inputs=["scored", "records"])
     if cfg.audit:

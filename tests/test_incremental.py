@@ -5,6 +5,7 @@ and the guard rails. Greenfield vs the reference (batch-only)."""
 from __future__ import annotations
 
 import shutil
+from dataclasses import replace
 
 import pandas as pd
 import pytest
@@ -65,6 +66,11 @@ def test_chained_batches_equal_full(spark, split, tmp_path):
         run_incremental(spark, b2, str(tmp_path / "inc1"), str(tmp_path / "inc2"), CFG)
     )
     assert rows == full_rows
+    # the uncapped inc1 candidates manifest records stop_token_cap=None,
+    # so a capped batch chained onto it is rejected before any job
+    with pytest.raises(ValueError, match="config mismatch"):
+        run_incremental(spark, b2, str(tmp_path / "inc1"), str(tmp_path / "inc3"),
+                        replace(CFG, stop_token_cap=50))
 
 
 def _mini_transcripts(spark, rows):
@@ -157,6 +163,10 @@ def test_config_mismatch_rejected(spark, split, tmp_path):
     with pytest.raises(ValueError, match="config mismatch"):
         run_incremental(spark, new, str(tmp_path / "base"), str(tmp_path / "inc"),
                         PipelineConfig(threshold=0.8))
+    # comp_op is checked against the base's scored manifest
+    with pytest.raises(ValueError, match="config mismatch.*comp_op"):
+        run_incremental(spark, new, str(tmp_path / "base"), str(tmp_path / "inc"),
+                        replace(CFG, comp_op=">"))
 
 
 def test_incomplete_base_rejected(spark, split, tmp_path):
@@ -176,7 +186,8 @@ def test_verify_strategy_pinned_and_chain_sized(spark, split, tmp_path):
     import dataclasses
 
     from sparksimjoin.checkpoint import CheckpointManager
-    from sparksimjoin.incremental import _chained_rows
+    from sparksimjoin.incremental import _chain_links, _chained_rows
+    from sparksimjoin.pipeline import tokens_join_strategy
 
     base, new, full = split
     full_rows = _rows(run_pipeline(spark, full, str(tmp_path / "full"), CFG))
@@ -203,3 +214,11 @@ def test_verify_strategy_pinned_and_chain_sized(spark, split, tmp_path):
     assert _chained_rows(base_ck, "parquet", "tokens") == base_ck.manifest(
         "tokens"
     )["rows"]
+
+    # both sides of the byte guard at the same row count: the default
+    # byte cap broadcasts this chain, a 1-byte cap pins shuffle-hash
+    mgrs = [cur for cur, _ in _chain_links(inc_ck, "parquet", "tokens")]
+    assert tokens_join_strategy(CFG, expect, mgrs) == "broadcast"
+    assert tokens_join_strategy(
+        dataclasses.replace(CFG, tokens_broadcast_bytes_cap=1), expect, mgrs
+    ) == "shuffle_hash"

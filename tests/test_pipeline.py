@@ -330,6 +330,10 @@ def test_resume_config_drift_rejected(spark, tmp_path):
     with pytest.raises(ValueError, match="resume config mismatch.*candidates"):
         run_pipeline(spark, small, wd, PipelineConfig(
             threshold=0.6, stop_token_cap=50))
+    with pytest.raises(ValueError, match="resume config mismatch.*scored"):
+        run_pipeline(spark, small, wd, PipelineConfig(
+            threshold=0.6, comp_op=">", refine_threshold=0.62,
+            refine_max_size=3))
     with pytest.raises(ValueError,
                        match="resume config mismatch.*clusters_refined"):
         run_pipeline(spark, small, wd, PipelineConfig(
