@@ -92,6 +92,62 @@ def _partial_topk(qm, q_ids, bm, b_ids, k):
     return rows
 
 
+def _cogroup_topk(q_side: DataFrame, b_side: DataFrame, keys: list[str],
+                  k: int, id_t: str) -> DataFrame:
+    """Per-group partial top-k: ``q_side`` (query_id, _qv, *keys) and
+    ``b_side`` (neighbor_id, _nv, *keys) meet in one cogroup per key
+    group, where each query block scores against the group's base
+    block as ONE numpy matmul (``_partial_topk``). The query block is
+    sliced so the sims matrix stays <= ~16M doubles (128 MB) whatever
+    the group size. -> (query_id, neighbor_id, cosine), at most k rows
+    per (query, group); :func:`_merge_topk` takes the global top-k.
+
+    Both children are pinned to the session parallelism (joins/core.
+    blocked_pairs rationale): groups are few in bytes but each is a
+    matmul task, and AQE's byte-based coalescing would fold them onto
+    1-2 tasks. The explicit numbered repartition on the exact cogroup
+    keys is reused by EnsureRequirements and exempt from coalescing."""
+    cols = ["query_id", "neighbor_id", "cosine"]
+
+    def score(_key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        if left.empty or right.empty:
+            return pd.DataFrame(columns=cols)
+        bm = np.array(right["_nv"].tolist(), dtype=np.float64)
+        b_ids = right["neighbor_id"].to_numpy()
+        step = max(1, (1 << 24) // len(right))
+        rows = []
+        for s in range(0, len(left), step):
+            sl = left.iloc[s:s + step]
+            qm = np.array(sl["_qv"].tolist(), dtype=np.float64)
+            rows.extend(
+                _partial_topk(qm, sl["query_id"].to_numpy(), bm, b_ids, k)
+            )
+        return pd.DataFrame(rows, columns=cols)
+
+    n_part = int(q_side.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return (
+        q_side.repartition(n_part, *keys).groupBy(*keys)
+        .cogroup(b_side.repartition(n_part, *keys).groupBy(*keys))
+        .applyInPandas(
+            score, schema=f"query_id {id_t}, neighbor_id {id_t}, cosine double"
+        )
+    )
+
+
+def _merge_topk(partial: DataFrame, k: int) -> DataFrame:
+    """Global top-k merge of partial (query_id, neighbor_id, cosine)
+    rows: cosine desc, neighbor id asc. -> (query_id, neighbor_id,
+    cosine, rank)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        partial.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cosine", "rank")
+    )
+
+
 def brute_force_topk(
     df: DataFrame,
     id_col: str,
@@ -126,38 +182,7 @@ def brute_force_topk(
         "_bc", F.pmod(F.xxhash64("neighbor_id"), F.lit(c)).cast("int")
     ).crossJoin(chunks.withColumnRenamed("_rep", "_qc"))
 
-    out_schema = f"query_id {id_t}, neighbor_id {id_t}, cosine double"
-
-    def score(_key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty or right.empty:
-            return pd.DataFrame(columns=["query_id", "neighbor_id", "cosine"])
-        qm = np.array(left["_qv"].tolist(), dtype=np.float64)
-        bm = np.array(right["_nv"].tolist(), dtype=np.float64)
-        rows = _partial_topk(qm, left["query_id"].to_numpy(), bm,
-                             right["neighbor_id"].to_numpy(), k)
-        return pd.DataFrame(rows, columns=["query_id", "neighbor_id", "cosine"])
-
-    # pin the cogroup children to the session parallelism (joins/core.
-    # candidate_pairs rationale): chunk rows are few in bytes but each
-    # cogroup task is a matmul — AQE's byte-based coalescing would
-    # fold the c^2 chunk pairs onto 1-2 tasks. The explicit numbered
-    # repartition on the exact cogroup keys is reused by
-    # EnsureRequirements and exempt from coalescing.
-    q_rep = q_rep.repartition(n_part, "_qc", "_bc")
-    b_rep = b_rep.repartition(n_part, "_qc", "_bc")
-    partial = (
-        q_rep.groupBy("_qc", "_bc")
-        .cogroup(b_rep.groupBy("_qc", "_bc"))
-        .applyInPandas(score, schema=out_schema)
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _merge_topk(_cogroup_topk(q_rep, b_rep, ["_qc", "_bc"], k, id_t), k)
 
 
 def _planes(dim: int, n_planes: int, seed: int) -> np.ndarray:
@@ -426,14 +451,7 @@ def lsh_topk(
     scored = _lsh_scored_candidates(df, id_col, vec_col, n_planes, n_tables,
                                     dim, seed, bucket_cap, metrics_out,
                                     topk=k)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _merge_topk(scored, k)
 
 
 #: fixed-point scale for the k-means centroid update: per-dimension
@@ -616,45 +634,8 @@ def ivf_topk(
             "_ch",
             F.pmod(F.xxhash64("neighbor_id"), F.lit(list_chunks)).cast("int"),
         )
-    out_schema = f"query_id {id_t}, neighbor_id {id_t}, cosine double"
-
-    def score_cell(_key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty or right.empty:
-            return pd.DataFrame(columns=["query_id", "neighbor_id", "cosine"])
-        bm = np.array(right["_nv"].tolist(), dtype=np.float64)
-        b_ids = right["neighbor_id"].to_numpy()
-        # slice the query block so sims stays <= ~16M doubles (128 MB)
-        step = max(1, (1 << 24) // max(len(right), 1))
-        rows = []
-        for s in range(0, len(left), step):
-            sl = left.iloc[s:s + step]
-            qm = np.array(sl["_qv"].tolist(), dtype=np.float64)
-            rows.extend(
-                _partial_topk(qm, sl["query_id"].to_numpy(), bm, b_ids, k)
-            )
-        return pd.DataFrame(rows, columns=["query_id", "neighbor_id", "cosine"])
-
     keys = ["cell"] if list_chunks == 1 else ["cell", "_ch"]
-    # pin the cogroup children to the session parallelism (same
-    # REPARTITION_BY_NUM rationale as brute_force_topk/_lsh_scored_
-    # candidates): cells are few in bytes but each is a matmul task,
-    # and AQE's byte-based coalescing folds them onto 1-2 tasks
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    q_side = q_side.repartition(n_part, *keys)
-    b_side = b_side.repartition(n_part, *keys)
-    partial = (
-        q_side.groupBy(*keys)
-        .cogroup(b_side.groupBy(*keys))
-        .applyInPandas(score_cell, schema=out_schema)
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _merge_topk(_cogroup_topk(q_side, b_side, keys, k, id_t), k)
 
 
 def embedding_neardup(

@@ -39,7 +39,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from .filter_math import EDIT_DISTANCE
-from .joins.core import AUTO_SALT_CAP, prefix_explode, prepare_sides
+from .joins.core import (
+    AUTO_SALT_CAP,
+    check_stop_token_cap,
+    prefix_explode,
+    prepare_sides,
+)
 from .tokenizers import Tokenizer
 from .validation import validate_join_inputs, validate_threshold
 
@@ -116,16 +121,9 @@ def estimate_join_cost(
             "estimate_join_cost covers set-similarity prefix blocking; "
             "EDIT_DISTANCE candidates are size-band-structured"
         )
-    if stop_token_cap is not None and stop_token_cap < 1:
-        # the joins and PipelineConfig treat a falsy cap as DISABLED
-        # (set_sim.py "if stop_token_cap:"), so an advisory for cap=0
-        # would price a configuration no join can run — reject, like
-        # resolve_salt_cap does for salt_cap=0
-        raise ValueError(
-            f"stop_token_cap must be >= 1 (got {stop_token_cap}); "
-            "pass None for the cap-free estimate — the joins treat "
-            "0/None as 'cap disabled'"
-        )
+    # the joins and the linkage drivers reject the same caps, so the
+    # advisory never prices a configuration no join can run
+    check_stop_token_cap(stop_token_cap)
     validate_join_inputs(l_df, r_df, l_key_attr, r_key_attr, l_join_attr, r_join_attr)
     validate_threshold(threshold, measure)
     tokenizer = tokenizer.with_return_set(True)

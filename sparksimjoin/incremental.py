@@ -73,6 +73,7 @@ from .clustering import connected_components
 from .joins.core import (
     build_salt_map,
     candidate_pairs,
+    check_stop_token_cap,
     dense_rank_tids,
     ensure_iid,
     exclude_stop_tokens,
@@ -190,6 +191,7 @@ def run_incremental(
     from .pipeline import validate_refine_config
 
     validate_refine_config(cfg)  # criteria without a threshold: loud, not ignored
+    check_stop_token_cap(cfg.stop_token_cap)
     if cfg.time_window_seconds is not None:
         raise ValueError(
             "time_window_seconds is not supported in incremental mode yet: "
@@ -328,7 +330,7 @@ def _run_stages(
                 return ex_new_l.select("token").distinct().count()
 
         cand_extra["batch_prefix_vocab"] = _vocab_metric
-        if cfg.stop_token_cap:
+        if cfg.stop_token_cap is not None:
             (ex_new_l, ex_new_r, ex_base_r), dropped = exclude_stop_tokens(
                 ranks, cfg.stop_token_cap, ex_new_l, ex_new_r, ex_base_r)
             cand_extra["dropped_stop_tokens"] = dropped.resolve

@@ -23,7 +23,13 @@ SURVEY.md §3.1):
   envelope around their measure-specific blocking: :func:`dedup_view`
   (exact-duplicate prologue), :func:`verify_strings` (the edit/Jaro
   iid -> string verify stage) and :func:`result_tail` (empty pairs,
-  gid expansion, diagonal, missing pairs, output projection).
+  gid expansion, diagonal, missing pairs, output projection);
+- the IDF-weighted vector joins (TF-IDF cosine, weighted
+  jaccard/cosine/dice) share one envelope around their measure:
+  :func:`token_side` (non-empty token lists), :func:`idf_weights`
+  (rank + lazy IDF weight table), :func:`weighted_records` (sorted
+  (tid, value) vectors with mass and weighted prefix) and
+  :func:`weighted_pairs` (the planned dense/blocked candidate step).
 """
 
 from __future__ import annotations
@@ -147,6 +153,17 @@ class LazyCountMetric:
 
     def __repr__(self) -> str:
         return "LazyCountMetric()"
+
+
+def check_stop_token_cap(cap: int | None) -> None:
+    """Reject a ``stop_token_cap`` below 1. Every token has doc
+    frequency >= 1, so such a cap would exclude every blocking key and
+    silently return no candidates; ``None`` is the only "no cap"."""
+    if cap is not None and cap < 1:
+        raise ValueError(
+            f"stop_token_cap must be >= 1 (got {cap}): a smaller cap "
+            "excludes every token; pass None for no cap"
+        )
 
 
 def exclude_stop_tokens(ranks: DataFrame, cap: int, *frames: DataFrame):
@@ -825,9 +842,10 @@ def plan_candidates(
       rule would admit only past ``est >= n^2 * L / RATIO`` — stricter
       than the unconditional gate at realistic token counts. The
       weighted joins prune on total weight, whose histogram is
-      corpus-sized rather than record-length-sized. Neither passes a
-      thunk, and their bench corpora sit far inside the unconditional
-      gate anyway (est/n^2 = 5.2 tfidf, 3.1 weighted).
+      corpus-sized rather than record-length-sized. Both reach this
+      planner through :func:`weighted_pairs`, which passes no thunk;
+      their bench corpora sit far inside the unconditional gate
+      anyway (est/n^2 = 5.2 tfidf, 3.1 weighted).
 
     ``allow_dense=False`` skips the gate and its jobs entirely: a
     LOSSY ``stop_token_cap`` (whose candidate drop is part of the
@@ -939,12 +957,13 @@ AUTO_SALT_CAP = 512
 def resolve_salt_cap(salt_cap: int | None) -> int:
     """``None`` -> ``AUTO_SALT_CAP``. Salting is mandatory here (the
     pinned REPARTITION_BY_NUM exchanges opt out of AQE's runtime
-    skew-join splitting), so 0/negative raises instead of silently
-    coercing to the default — the old ``salt_cap or AUTO_SALT_CAP``
-    falsy-coercion made an explicit 0 mean "use the default"."""
+    skew-join splitting), so a cap below 1 raises instead of silently
+    coercing to the default (the old ``salt_cap or AUTO_SALT_CAP``
+    falsy-coercion made an explicit 0 mean "use the default") or
+    truncating a fraction to 0."""
     if salt_cap is None:
         return AUTO_SALT_CAP
-    if salt_cap <= 0:
+    if salt_cap < 1:
         raise ValueError(
             "salt_cap must be a positive doc-frequency threshold "
             "(salting cannot be disabled: pinned exchanges opt out of "
@@ -1029,6 +1048,123 @@ def blocked_pairs(
         .select("l_id", "r_id")
         .distinct()
     )
+
+
+# ---- weighted-vector envelope (joins/tfidf.py, joins/weighted.py) --
+# Both IDF-weighted joins run the weighted prefix bound of Bayardo et
+# al. (WWW 2007 "Scaling Up All Pairs Similarity Search") over one
+# shape: a non-empty token side per input, one rank + IDF weight
+# table, a record frame of (tid, value) vectors in ascending tid order
+# (global rarity order = descending IDF weight) with its mass and
+# mass-bound prefix, and one planned candidate step. Each module keeps
+# its measure: value and weight expressions, mass accumulator, prefix
+# fraction, band residual and verify formula.
+
+
+def token_side(df: DataFrame, key_attr: str, join_attr: str,
+               tokenizer: Tokenizer) -> DataFrame:
+    """-> (id, toks) of the rows with at least one token (a weighted
+    similarity has no direction on an empty vector). The tokenizer
+    decides bag or set semantics."""
+    return (
+        tokenize_table(df, key_attr, join_attr, tokenizer)
+        .select("id", "toks")
+        .where(F.size("toks") > 0)
+    )
+
+
+def idf_weights(corpus: list[DataFrame], weight: Column) -> tuple[DataFrame, DataFrame]:
+    """-> (ranks, wtab): the tracked :func:`build_token_ranks` table
+    (token, cnt, tid) over the ``corpus`` token sides, and the weight
+    table (token, tid, w) with ``w = weight`` evaluated over each rank
+    row's ``cnt`` and the corpus record count ``_n``.
+
+    ``ranks`` is persisted because it feeds the weight table AND the
+    salt map, and the record frames built from ``wtab`` feed four plan
+    branches (both explode sides + both verify sides): without it the
+    rank/weight/prefix subtree re-executes per branch (measured 4x
+    BroadcastNestedLoop repetitions of the N crossJoin). N rides a
+    broadcast one-row frame, which keeps the weight table lazy (no
+    driver count job)."""
+    ranks = track(build_token_ranks(corpus))
+    n_df = reduce(DataFrame.unionByName, corpus).agg(F.count("*").alias("_n"))
+    wtab = ranks.crossJoin(F.broadcast(n_df)).select("token", "tid", weight.alias("w"))
+    return ranks, wtab
+
+
+def weighted_records(rows: DataFrame, frac: float, acc: str, step: str) -> DataFrame:
+    """(id, tid, v) rows -> one row per record: (id, tvs, tids, mass,
+    vmap, prefix). All array/map ops, no window, no Python.
+
+    ``tvs`` is the record's (tid, v) structs sorted by tid, ``tids``
+    their tid half and ``vmap`` the tid -> v map. ``mass`` folds the
+    values in that ascending-tid order: ``aggregate(vs, acc, step)``,
+    where ``step`` is a SQL expression over the running value ``{a}``
+    and the element ``x`` (a deterministic summation order, whatever
+    the accumulator type). ``prefix`` keeps the positions whose
+    preceding cumulative mass is <= (1 - ``frac``) * mass: a pair
+    sharing no prefix token has overlap < ``frac`` * mass. The
+    cumulative runs in the accumulator type; only the comparison is
+    float, widened by 1e-6 (widening only adds candidates)."""
+    rec = rows.groupBy("id").agg(
+        F.array_sort(F.collect_list(F.struct("tid", "v"))).alias("tvs")
+    )
+    rec = rec.select(
+        "id", "tvs",
+        F.expr("transform(tvs, x -> x.tid)").alias("tids"),
+        F.expr("transform(tvs, x -> x.v)").alias("vs"),
+    ).select(
+        "id", "tvs", "tids", "vs",
+        F.expr(f"aggregate(vs, {acc}, (a, x) -> {step.format(a='a')})").alias("mass"),
+    )
+    bound = f"(1.0d - {frac!r}) * CAST(mass AS DOUBLE) + 1e-6"
+    p = (
+        f"aggregate(vs, struct({acc} AS s, 0 AS c), "
+        "(st, x) -> struct("
+        f"{step.format(a='st.s')} AS s, "
+        f"st.c + IF(CAST(st.s AS DOUBLE) <= {bound}, 1, 0) AS c), "
+        "st -> st.c)"
+    )
+    return rec.select(
+        "id", "tvs", "tids", "mass",
+        F.map_from_arrays("tids", "vs").alias("vmap"),
+        F.expr(f"slice(tids, 1, {p})").alias("prefix"),
+    )
+
+
+def side_cols(side: str, *cols: str) -> list[Column]:
+    """A record frame's ``id`` and ``cols`` renamed for one side of a
+    pair: ``{side}_id``, ``{side}_{col}``."""
+    return [F.col("id").alias(f"{side}_id"),
+            *(F.col(c).alias(f"{side}_{c}") for c in cols)]
+
+
+def weighted_pairs(
+    rec_l: DataFrame,
+    rec_r: DataFrame,
+    ranks: DataFrame,
+    salt_cap: int,
+    self_join: bool,
+    band: Column | None = None,
+) -> DataFrame:
+    """Candidate (l_id, r_id) pairs of a weighted-vector join: the
+    record frames' prefixes are exploded, :func:`plan_candidates`
+    picks the path, and :func:`dense_pairs` or :func:`blocked_pairs`
+    (hot tids salted at ``salt_cap``) keeps the pairs passing
+    ``band & l_id < r_id`` (self-join) or ``band`` (two tables).
+    ``band`` is a residual over ``l_mass``/``r_mass``; without one,
+    neither frame carries the mass."""
+    cols = ("mass",) if band is not None else ()
+    ex_l = rec_l.select(*side_cols("l", *cols), F.explode("prefix").alias("token"))
+    ex_r = rec_r.select(*side_cols("r", *cols), F.explode("prefix").alias("token"))
+    use_dense, _ = plan_candidates(rec_l, rec_r, ex_l, ex_r, same=self_join)
+    cond = F.col("l_id") < F.col("r_id") if self_join else F.lit(True)
+    if band is not None:
+        cond = band & cond
+    if use_dense:
+        return dense_pairs(rec_l.select(*side_cols("l", *cols)),
+                           rec_r.select(*side_cols("r", *cols)), cond)
+    return blocked_pairs(ex_l, ex_r, build_salt_map(ranks, salt_cap, key_col="tid"), cond)
 
 
 def candidate_pairs(

@@ -34,6 +34,7 @@ from .core import (
     build_salt_map,
     candidate_pairs,
     canonical_set_key,
+    check_stop_token_cap,
     dedup_view,
     dense_band_pair_stats,
     dense_candidates,
@@ -122,6 +123,7 @@ def set_sim_join(
                          l_out_attrs, r_out_attrs)
     validate_threshold(threshold, measure)
     validate_comp_op_for_sim_measure(comp_op, measure)
+    check_stop_token_cap(stop_token_cap)
 
     # set-sims operate on token *sets* (tokenizer coerced, as the
     # reference does at the head of every join function)
@@ -137,7 +139,7 @@ def set_sim_join(
     prep_l, prep_r, ranks = prepare_sides(*view.tables, tok)
     ex_l = prefix_explode(prep_l, "l", measure, threshold)
     ex_r = prefix_explode(prep_r, "r", measure, threshold)
-    if stop_token_cap:
+    if stop_token_cap is not None:
         # the dropped-token count rides the join's own action
         # (joins/core.exclude_stop_tokens) — no eager count job
         (ex_l, ex_r), dropped = exclude_stop_tokens(ranks, stop_token_cap, ex_l, ex_r)

@@ -61,14 +61,20 @@ comparison is epsilon-widened — widening only adds candidates).
 Cosine is scale-invariant, so no norm band exists (unlike the
 set-weighted joins' W-band); the prefix is the whole filter.
 
-Candidates come from the salted int-tid prefix equi-join
+The weighted-vector envelope is shared with joins/weighted.py
+(joins/core): ``token_side``, ``idf_weights``, ``weighted_records``
+(mass = ‖v‖², prefix fraction t²) and ``weighted_pairs``, whose
+candidates come from the salted int-tid prefix equi-join
 (joins/core.blocked_pairs, with the same mandatory hot-token salt as
 every join here) or, when joins/core.plan_candidates finds that the
 blocked join's meeting volume reaches n_l*n_r, from the dense
-all-pairs l<r product (joins/core.dense_pairs).
+all-pairs l<r product (joins/core.dense_pairs). This module keeps
+the bag term frequencies, the plain/dampened value and weight
+expressions, the dampened zero-vector filter and the adaptive
+BIGINT/DECIMAL dot.
 
-100 TB notes: verify is a JVM ``array_intersect`` + map-lookup
-aggregate on int tids (no Python anywhere in this join); headroom:
+100 TB notes: verify is a JVM map-lookup aggregate on int tids (no
+Python anywhere in this join); headroom:
 with TFIDF_SCALE=10³, a df=1 token in an N=10¹²-record corpus has
 w = 10¹⁵, v² = tf²·10³⁰, and ~10³ distinct terms with tf ~10² keep
 Σv² ≤ 10³⁷ < 10³⁸ — inside DECIMAL(38,0) at full target scale (the
@@ -84,12 +90,12 @@ from ..cache import track
 from ..tokenizers import Tokenizer
 from ..validation import validate_join_inputs, validate_threshold
 from .core import (
-    blocked_pairs,
-    build_salt_map,
-    build_token_ranks,
-    dense_pairs,
-    plan_candidates,
+    idf_weights,
     resolve_salt_cap,
+    side_cols,
+    token_side,
+    weighted_pairs,
+    weighted_records,
 )
 
 #: weight quantization: w = (N * TFIDF_SCALE) DIV df. 10³ (not
@@ -99,22 +105,25 @@ TFIDF_SCALE = 1_000
 
 _DEC = "DECIMAL(38,0)"
 
-
-def _bag_side(df: DataFrame, key: str, attr: str, tok: Tokenizer) -> DataFrame:
-    return (
-        df.where(F.col(attr).isNotNull())
-        .select(F.col(key).alias("id"), tok.spark_expr(F.col(attr)).alias("toks"))
-        .where(F.size("toks") > 0)
-    )
+#: the adaptive exact-integer dot runs in primitive BIGINT while
+#: max(mass) over both record frames stays below this bound, else in
+#: DECIMAL(38,0). Every partial sum and every product is bounded by
+#: dot <= sqrt(mass_x * mass_y) <= max(mass) (Cauchy-Schwarz; all
+#: terms non-negative, so partial sums are monotone below the final
+#: dot), so under 2^62 the BIGINT aggregate cannot wrap — measured far
+#: cheaper per pair than the Decimal fallback (object arithmetic +
+#: per-op scale checks), and bit-identical: both forms are exact
+#: integers and the final CAST(x AS DOUBLE) is correctly rounded from
+#: either type. Corpora whose weights outgrow the bound (the
+#: 10^12-record headroom case in the module docstring) keep DECIMAL.
+BIGINT_DOT_BOUND = 1 << 62
 
 
 def _rec_frame(bag_df: DataFrame, wtab: DataFrame, threshold: float,
                dampen: bool) -> DataFrame:
-    """(id, tids asc = global rarity order, vmap tid→v, n2, prefix).
-
-    All array/map ops — no window, no Python. ``prefix`` keeps the
-    positions whose preceding cumulative norm² is ≤ (1−t²)·‖v‖²
-    (module docstring; epsilon-widened, lossless). Undampened:
+    """(id, tvs, tids, mass = ‖v‖², vmap tid→v, prefix) — the shared
+    joins/core.weighted_records frame over this measure's term
+    vectors, prefix fraction t² (module docstring). Undampened:
     ``v = tf·w`` BIGINT, norms exact in DECIMAL. Dampened:
     ``v = ln(tf+1)·w`` double, norms accumulated in ASCENDING-tid
     order over the sorted array — a DETERMINISTIC double summation
@@ -122,52 +131,21 @@ def _rec_frame(bag_df: DataFrame, wtab: DataFrame, threshold: float,
     round-before-filter margin be meaningful. Dampened records whose
     every token is corpus-ubiquitous (all ``ln(idf) = 0``) have a
     zero vector — no direction — and are dropped here."""
-    if dampen:
-        acc = "CAST(0.0 AS DOUBLE)"
-        step = "a + x * x"
-        cum_step = "st.s + x * x"
-    else:
-        acc = f"CAST(0 AS {_DEC})"
-        step = f"CAST(a + CAST(x AS {_DEC}) * x AS {_DEC})"
-        cum_step = f"CAST(st.s + CAST(x AS {_DEC}) * x AS {_DEC})"
     v = (F.log(F.col("tf") + F.lit(1.0)) * F.col("w") if dampen
          else F.col("tf") * F.col("w"))
-    tf = (
+    rows = (
         bag_df.select("id", F.explode("toks").alias("token"))
         .groupBy("id", "token")
         .agg(F.count("*").alias("tf"))
-        .join(wtab.select("token", "tid", "w"), "token")
+        .join(wtab, "token")
         .select("id", "tid", v.alias("v"))
     )
-    rec = tf.groupBy("id").agg(
-        F.array_sort(F.collect_list(F.struct("tid", "v"))).alias("tvs")
-    )
-    rec = rec.select(
-        "id", "tvs",
-        F.expr("transform(tvs, x -> x.tid)").alias("tids"),
-        F.expr("transform(tvs, x -> x.v)").alias("vs"),
-    ).select(
-        "id", "tvs", "tids", "vs",
-        F.expr(f"aggregate(vs, {acc}, (a, x) -> {step})").alias("n2"),
-    )
+    frac = threshold * threshold
     if dampen:
-        rec = rec.where(F.col("n2") > 0)
-    # prefix length p = #{i : cum_{i-1} <= (1-t²)·n2}; the cumulative
-    # runs in the exact accumulator type, only the comparison is
-    # float (widened)
-    bound = f"(1.0d - {threshold * threshold!r}) * CAST(n2 AS DOUBLE) + 1e-6"
-    p = (
-        f"aggregate(vs, struct({acc} AS s, 0 AS c), "
-        "(st, x) -> struct("
-        f"{cum_step} AS s, "
-        f"st.c + IF(CAST(st.s AS DOUBLE) <= {bound}, 1, 0) AS c), "
-        "st -> st.c)"
-    )
-    return rec.select(
-        "id", "tvs", "tids", "n2",
-        F.map_from_arrays("tids", "vs").alias("vmap"),
-        F.expr(f"slice(tids, 1, {p})").alias("prefix"),
-    )
+        rec = weighted_records(rows, frac, "CAST(0.0 AS DOUBLE)", "{a} + x * x")
+        return rec.where(F.col("mass") > 0)
+    return weighted_records(rows, frac, f"CAST(0 AS {_DEC})",
+                            f"CAST({{a}} + CAST(x AS {_DEC}) * x AS {_DEC})")
 
 
 def tfidf_join(
@@ -208,23 +186,14 @@ def tfidf_join(
     cap = resolve_salt_cap(salt_cap)
     bag_tok = tokenizer.with_return_set(False)
 
-    l_bag = _bag_side(l_df, l_key_attr, l_join_attr, bag_tok)
-    r_bag = l_bag if self_join else _bag_side(r_df, r_key_attr, r_join_attr, bag_tok)
+    l_bag = token_side(l_df, l_key_attr, l_join_attr, bag_tok)
+    r_bag = l_bag if self_join else token_side(r_df, r_key_attr, r_join_attr, bag_tok)
 
     # df over DISTINCT tokens per record (document frequency), shared
-    # across both sides; ranks feed the weight table AND the salt map
-    # and the record frame feeds four plan branches — same persist
-    # rationale as weighted.py
+    # across both sides
     l_set = l_bag.select("id", F.array_distinct("toks").alias("toks"))
     corpus = [l_set] if self_join else [
         l_set, r_bag.select("id", F.array_distinct("toks").alias("toks"))]
-    ranks = track(build_token_ranks(corpus))  # (token, cnt, tid)
-
-    # N via a broadcast 1-row frame: keeps the weight table lazy
-    n_df = corpus[0]
-    for extra in corpus[1:]:
-        n_df = n_df.unionByName(extra)
-    n_df = n_df.agg(F.count("*").alias("_n"))
     w = (
         # ln(N/df): double division FIRST, then one ln — the oracle
         # mirrors the op order (its ln may still differ by an ulp,
@@ -233,36 +202,18 @@ def tfidf_join(
         if dampen
         else F.expr(f"CAST((_n * {TFIDF_SCALE}) DIV cnt AS BIGINT)")
     )
-    wtab = ranks.crossJoin(F.broadcast(n_df)).select("token", "tid", w.alias("w"))
+    ranks, wtab = idf_weights(corpus, w)
 
     rec_l = track(_rec_frame(l_bag, wtab, threshold, dampen))
     rec_r = rec_l if self_join else track(
         _rec_frame(r_bag, wtab, threshold, dampen))
 
-    ex_l = rec_l.select(F.col("id").alias("l_id"), F.explode("prefix").alias("token"))
-    ex_r = rec_r.select(F.col("id").alias("r_id"), F.explode("prefix").alias("token"))
+    # cosine is scale-invariant: no band, so the dense candidate set
+    # is the plain (l<r) product
+    cand = weighted_pairs(rec_l, rec_r, ranks, cap, self_join)
 
-    # dense all-pairs vs blocked (joins/core.plan_candidates; cosine
-    # has no band, so the dense candidate set is the l<r product and
-    # the window is not priced)
-    use_dense, _ = plan_candidates(rec_l, rec_r, ex_l, ex_r, same=self_join)
-    pair_pred = F.col("l_id") < F.col("r_id") if self_join else F.lit(True)
-    if use_dense:
-        cand = dense_pairs(rec_l.select(F.col("id").alias("l_id")),
-                           rec_r.select(F.col("id").alias("r_id")), pair_pred)
-    else:
-        cand = blocked_pairs(ex_l, ex_r, build_salt_map(ranks, cap, key_col="tid"),
-                             pair_pred)
-
-    lv = rec_l.select(
-        F.col("id").alias("l_id"), F.col("tids").alias("l_tids"),
-        F.col("tvs").alias("l_tvs"),
-        F.col("vmap").alias("l_vmap"), F.col("n2").alias("l_n2"),
-    )
-    rv = rec_r.select(
-        F.col("id").alias("r_id"), F.col("tids").alias("r_tids"),
-        F.col("vmap").alias("r_vmap"), F.col("n2").alias("r_n2"),
-    )
+    lv = rec_l.select(*side_cols("l", "tids", "tvs", "vmap", "mass"))
+    rv = rec_r.select(*side_cols("r", "tids", "vmap", "mass"))
     if dampen:
         # deterministic summation: array_intersect preserves l_tids'
         # ascending order, so the double adds run in a fixed order
@@ -272,23 +223,13 @@ def tfidf_join(
             "(a, t) -> a + l_vmap[t] * r_vmap[t])"
         )
     else:
-        # adaptive exact-integer dot: every partial sum and every
-        # product is bounded by dot <= sqrt(n2_x * n2_y) <= max(n2)
-        # (Cauchy-Schwarz; all terms non-negative, so partial sums are
-        # monotone below the final dot), so when max(n2) over both
-        # record frames stays under 2^62 the whole aggregate runs in
-        # primitive BIGINT with zero wrap risk — measured far cheaper
-        # per pair than the Decimal fallback (object arithmetic +
-        # per-op scale checks), and bit-identical: both forms are
-        # exact integers and the final CAST(x AS DOUBLE) is correctly
-        # rounded from either type. Corpora whose weights outgrow the
-        # bound (the 10^12-record headroom case in the module
-        # docstring) keep the DECIMAL(38,0) path.
-        max_n2 = rec_l.agg(F.max("n2")).first()[0]
+        # adaptive exact-integer dot (BIGINT_DOT_BOUND carries the
+        # rationale)
+        max_mass = rec_l.agg(F.max("mass")).first()[0]
         if not self_join:
-            m2r = rec_r.agg(F.max("n2")).first()[0]
-            max_n2 = max(max_n2 or 0, m2r or 0)
-        if max_n2 is not None and int(max_n2) < (1 << 62):
+            max_r = rec_r.agg(F.max("mass")).first()[0]
+            max_mass = max(max_mass or 0, max_r or 0)
+        if max_mass is not None and int(max_mass) < BIGINT_DOT_BOUND:
             # iterate the LEFT record's pre-zipped (tid, v) structs
             # with ONE r-side map lookup per token, instead of
             # array_intersect (hash-set build over both arrays) plus
@@ -309,9 +250,9 @@ def tfidf_join(
                 ") AS DOUBLE)"
             )
     # op order mirrored EXACTLY in the SQL oracle: double(dot) /
-    # (sqrt(double(l_n2)) * sqrt(double(r_n2)))
+    # (sqrt(double(l_mass)) * sqrt(double(r_mass)))
     sim = dot / (
-        F.sqrt(F.col("l_n2").cast("double")) * F.sqrt(F.col("r_n2").cast("double"))
+        F.sqrt(F.col("l_mass").cast("double")) * F.sqrt(F.col("r_mass").cast("double"))
     )
     verified = (
         cand.join(lv, "l_id")

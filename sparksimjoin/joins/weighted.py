@@ -24,7 +24,11 @@ replicates the integers and lands on the identical doubles); a
 log-idf variant would hinge on ln() being bit-identical between
 java.lang.Math and libm, which is not guaranteed.
 
-Filter-verify plan, same shape as joins/core.py:
+Filter-verify plan, on the weighted-vector envelope shared with
+joins/tfidf.py (joins/core ``token_side``, ``idf_weights``,
+``weighted_records`` with mass = W(x), ``weighted_pairs``); this module
+keeps the ``frac`` table, the W-band predicate and the three
+similarity formulas:
 
 1. token ranks (joins/core.build_token_ranks): exact global df + the
    dense int tid in (df asc, token asc) order. Because w_t is
@@ -51,9 +55,8 @@ Filter-verify plan, same shape as joins/core.py:
    fast path) with weights looked up from a per-record map — exact
    BIGINT overlap weight, one float step, threshold compare.
 
-No Python UDFs, no driver collect; the one count() materializing N
-also gates empty inputs early (same pattern as the unweighted joins'
-stats probes).
+No Python UDFs, no driver collect: N rides a broadcast one-row
+frame (joins/core.idf_weights), so the weight table stays lazy.
 """
 
 from __future__ import annotations
@@ -65,59 +68,29 @@ from ..cache import track
 from ..tokenizers import Tokenizer
 from ..validation import validate_join_inputs, validate_threshold
 from .core import (
-    blocked_pairs,
-    build_salt_map,
-    build_token_ranks,
-    dense_pairs,
-    plan_candidates,
+    idf_weights,
     resolve_salt_cap,
+    side_cols,
+    token_side,
+    weighted_pairs,
+    weighted_records,
 )
 
 #: weight quantization: w = (N * WEIGHT_SCALE) DIV df
 WEIGHT_SCALE = 1_000_000
 
 
-def _tok_side(df: DataFrame, key: str, attr: str, tok: Tokenizer) -> DataFrame:
-    return (
-        df.where(F.col(attr).isNotNull())
-        .select(F.col(key).alias("id"), tok.spark_expr(F.col(attr)).alias("toks"))
-        .where(F.size("toks") > 0)
-    )
-
-
 def _rec_frame(tok_df: DataFrame, wtab: DataFrame, prefix_frac: float) -> DataFrame:
-    """(id, tids sorted asc = weight desc, wmap, tw, prefix) — all
-    array/map ops, no window. ``prefix_frac`` is f from the module
-    docstring: the minimum overlap-weight fraction of this record's
-    total weight a qualifying pair must reach."""
-    rw = tok_df.select("id", F.explode("toks").alias("token")).join(
-        wtab.select("token", "tid", "w"), "token"
-    )
-    rec = rw.groupBy("id").agg(
-        F.array_sort(F.collect_list(F.struct("tid", "w"))).alias("_tw")
-    )
-    rec = rec.select(
-        "id",
-        F.expr("transform(_tw, x -> x.tid)").alias("tids"),
-        F.expr("transform(_tw, x -> x.w)").alias("ws"),
-    ).select(
-        "id", "tids", "ws",
-        F.expr("aggregate(ws, CAST(0 AS BIGINT), (a, x) -> a + x)").alias("tw"),
-    )
-    # prefix length p = #{i : cum_{i-1} <= (1-f)*tw}; epsilon widens
-    # (module docstring step 2 — widening is lossless)
-    bound = f"(1.0d - {prefix_frac!r}) * CAST(tw AS DOUBLE) + 1e-6"
-    p = (
-        "aggregate(ws, struct(CAST(0 AS BIGINT) AS s, 0 AS c), "
-        "(st, x) -> struct(st.s + x AS s, "
-        f"st.c + IF(CAST(st.s AS DOUBLE) <= {bound}, 1, 0) AS c), "
-        "st -> st.c)"
-    )
-    return rec.select(
-        "id", "tids", "tw",
-        F.map_from_arrays("tids", "ws").alias("wmap"),
-        F.expr(f"slice(tids, 1, {p})").alias("prefix"),
-    )
+    """(id, tids sorted asc = weight desc, mass = W(x), vmap tid→w,
+    prefix) — the shared joins/core.weighted_records frame over the
+    record's token weights, without its ``tvs`` structs (verify reads
+    the map). ``prefix_frac`` is f from the module docstring: the
+    minimum overlap-weight fraction of this record's total weight a
+    qualifying pair must reach."""
+    rows = tok_df.select("id", F.explode("toks").alias("token")).join(
+        wtab, "token"
+    ).select("id", "tid", F.col("w").alias("v"))
+    return weighted_records(rows, prefix_frac, "CAST(0 AS BIGINT)", "{a} + x").drop("tvs")
 
 
 def _weighted_join(
@@ -136,8 +109,7 @@ def _weighted_join(
     validate_join_inputs(l_df, r_df, l_key_attr, r_key_attr, l_join_attr,
                          r_join_attr, None, None)
     validate_threshold(threshold, "JACCARD")
-    if salt_cap is not None and salt_cap <= 0:
-        raise ValueError(f"salt_cap must be positive (got {salt_cap})")
+    cap = resolve_salt_cap(salt_cap)
     # f: minimum overlap-weight fraction (module docstring step 2).
     # DICE: 2O/(W1+W2) >= t with W2 >= O gives O >= t*W1/(2-t), and
     # 2*min/(min+max) >= t bounds the band at [f*W1, W1/f] with the
@@ -147,82 +119,41 @@ def _weighted_join(
             "DICE": threshold / (2.0 - threshold)}[measure]
     tok = tokenizer.with_return_set(True)
 
-    l_tok = _tok_side(l_df, l_key_attr, l_join_attr, tok)
-    r_tok = l_tok if self_join else _tok_side(r_df, r_key_attr, r_join_attr, tok)
-    corpus = [l_tok] if self_join else [l_tok, r_tok]
-
-    # persisted: ranks feeds the weight table AND the salt map, and
-    # the record frame feeds four plan branches (both explode sides +
-    # both verify sides) — without the persist the whole
-    # rank/weight/prefix subtree re-executes per branch (measured 4x
-    # BroadcastNestedLoop repetitions of the N crossJoin in the
-    # un-persisted plan). Same cache.track discipline as
-    # prepare_sides; callers wrap in scoped_caches for hygiene.
-    ranks = track(build_token_ranks(corpus))  # (token, cnt, tid)
-    # N via a broadcast 1-row frame: keeps the weight table lazy
-    n_df = corpus[0]
-    for extra in corpus[1:]:
-        n_df = n_df.unionByName(extra)
-    n_df = n_df.agg(F.count("*").alias("_n"))
-    wtab = ranks.crossJoin(F.broadcast(n_df)).select(
-        "token", "tid", "cnt",
-        F.expr(f"CAST((_n * {WEIGHT_SCALE}) DIV cnt AS BIGINT)").alias("w"),
+    l_tok = token_side(l_df, l_key_attr, l_join_attr, tok)
+    r_tok = l_tok if self_join else token_side(r_df, r_key_attr, r_join_attr, tok)
+    ranks, wtab = idf_weights(
+        [l_tok] if self_join else [l_tok, r_tok],
+        F.expr(f"CAST((_n * {WEIGHT_SCALE}) DIV cnt AS BIGINT)"),
     )
 
     rec_l = track(_rec_frame(l_tok, wtab, frac))
     rec_r = rec_l if self_join else track(_rec_frame(r_tok, wtab, frac))
 
-    ex_l = rec_l.select(
-        F.col("id").alias("l_id"), F.col("tw").alias("l_tw"),
-        F.explode("prefix").alias("token"),
-    )
-    ex_r = rec_r.select(
-        F.col("id").alias("r_id"), F.col("tw").alias("r_tw"),
-        F.explode("prefix").alias("token"),
-    )
+    # the W-band (module docstring step 3), epsilon-widened; the dense
+    # path evaluates it inside the nested loop, the blocked path as
+    # the candidate join's residual
     eps = 1e-9
     band = (
-        (F.col("r_tw").cast("double")
-         >= F.lit(frac) * F.col("l_tw") * (1.0 - eps))
-        & (F.col("r_tw").cast("double")
-           <= F.col("l_tw") / F.lit(frac) * (1.0 + eps))
+        (F.col("r_mass").cast("double")
+         >= F.lit(frac) * F.col("l_mass") * (1.0 - eps))
+        & (F.col("r_mass").cast("double")
+           <= F.col("l_mass") / F.lit(frac) * (1.0 + eps))
     )
-    pair_pred = F.col("l_id") < F.col("r_id") if self_join else F.lit(True)
+    cand = weighted_pairs(rec_l, rec_r, ranks, cap, self_join, band)
 
-    # dense all-pairs vs blocked (joins/core.plan_candidates; the
-    # W-band histogram is corpus-sized, so the window is not priced).
-    # The dense join evaluates the SAME W-band predicate the blocked
-    # path applies as a residual
-    use_dense, _ = plan_candidates(rec_l, rec_r, ex_l, ex_r, same=self_join)
-    if use_dense:
-        cand = dense_pairs(
-            rec_l.select(F.col("id").alias("l_id"), F.col("tw").alias("l_tw")),
-            rec_r.select(F.col("id").alias("r_id"), F.col("tw").alias("r_tw")),
-            band & pair_pred,
-        )
-    else:
-        salt_map = build_salt_map(ranks, resolve_salt_cap(salt_cap), key_col="tid")
-        cand = blocked_pairs(ex_l, ex_r, salt_map, band & pair_pred)
-
-    lv = rec_l.select(
-        F.col("id").alias("l_id"), F.col("tids").alias("l_tids"),
-        F.col("wmap").alias("l_wmap"), F.col("tw").alias("l_tw"),
-    )
-    rv = rec_r.select(
-        F.col("id").alias("r_id"), F.col("tids").alias("r_tids"),
-        F.col("tw").alias("r_tw"),
-    )
+    lv = rec_l.select(*side_cols("l", "tids", "vmap", "mass"))
+    rv = rec_r.select(*side_cols("r", "tids", "mass"))
     if measure == "JACCARD":
         sim = F.col("_ow").cast("double") / (
-            F.col("l_tw") + F.col("r_tw") - F.col("_ow")
+            F.col("l_mass") + F.col("r_mass") - F.col("_ow")
         )
     elif measure == "DICE":
         sim = (F.lit(2) * F.col("_ow")).cast("double") / (
-            F.col("l_tw") + F.col("r_tw")
+            F.col("l_mass") + F.col("r_mass")
         )
-    else:  # COSINE: double product — bigint l_tw*r_tw can overflow
+    else:  # COSINE: double product — bigint l_mass*r_mass can overflow
         sim = F.col("_ow").cast("double") / F.sqrt(
-            F.col("l_tw").cast("double") * F.col("r_tw").cast("double")
+            F.col("l_mass").cast("double") * F.col("r_mass").cast("double")
         )
     verified = (
         cand.join(lv, "l_id")
@@ -231,7 +162,7 @@ def _weighted_join(
             "_ow",
             F.expr(
                 "aggregate(array_intersect(l_tids, r_tids), "
-                "CAST(0 AS BIGINT), (a, t) -> a + l_wmap[t])"
+                "CAST(0 AS BIGINT), (a, t) -> a + l_vmap[t])"
             ),
         )
         .withColumn("_sim_score", sim)

@@ -46,6 +46,7 @@ from .joins.core import (
     build_salt_map,
     build_token_ranks,
     candidate_pairs,
+    check_stop_token_cap,
     ensure_iid,
     exclude_stop_tokens,
     order_tokens,
@@ -344,6 +345,7 @@ def run_pipeline(
     ignored."""
     cfg = config or PipelineConfig()
     validate_refine_config(cfg)
+    check_stop_token_cap(cfg.stop_token_cap)
     if ckpt is None:
         ckpt = CheckpointManager(spark, workdir, fmt=checkpoint_format)
     # scoped_caches (not a global release_all): every stage is durably
@@ -431,7 +433,7 @@ def _run_stages(
         ex_r = prefix_explode(tokens, "r", cfg.measure, cfg.threshold)
         # the stop list and the salt map read tid doc frequencies
         # straight off the checkpointed vocabulary (cnt rides with tid)
-        if cfg.stop_token_cap:
+        if cfg.stop_token_cap is not None:
             # the dropped-token count rides the stage's checkpoint
             # write; the callable extra is resolved by the manifest
             # builder AFTER that action — no eager count job

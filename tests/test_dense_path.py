@@ -118,17 +118,20 @@ def test_dense_vs_blocked_tversky_asymmetric(spark, monkeypatch):
     assert len(got_dense) > 0
 
 
-def test_dense_vs_blocked_tfidf(spark, monkeypatch):
+@pytest.mark.parametrize("self_join", [True, False], ids=["self", "two"])
+def test_dense_vs_blocked_tfidf(spark, monkeypatch, self_join):
     """tfidf_join's dense path (and the adaptive BIGINT dot) vs the
-    blocked path: scores must be bit-identical (both integer-exact)."""
+    blocked path: scores must be bit-identical (both integer-exact).
+    The two-table arm joins the corpus with itself as two inputs, so
+    its dense product has no orientation predicate."""
     import sparksimjoin.joins.core as core
 
     corpus = _dense_corpus(spark)
     dense = tfidf_join(corpus, corpus, "id", "id", "text", "text", WS, 0.5,
-                       self_join=True)
+                       self_join=self_join)
     monkeypatch.setattr(core, "DENSE_ALLPAIRS_CAP", 0)
     blocked = tfidf_join(corpus, corpus, "id", "id", "text", "text", WS, 0.5,
-                         self_join=True)
+                         self_join=self_join)
     assert _n_bnl(dense) == _n_bnl(blocked) + 1
     got_dense = _pairs(dense)
     got_blocked = _pairs(blocked)
@@ -136,19 +139,23 @@ def test_dense_vs_blocked_tfidf(spark, monkeypatch):
     assert len(got_dense) > 0
 
 
-def test_dense_vs_blocked_weighted_jaccard(spark, monkeypatch):
+@pytest.mark.parametrize("self_join", [True, False], ids=["self", "two"])
+@pytest.mark.parametrize("measure", ["jaccard", "cosine", "dice"])
+def test_dense_vs_blocked_weighted(spark, monkeypatch, measure, self_join):
     """The weighted dense arm evaluates the same W-band predicate
     inside the BNL, so both paths must verify to the identical
-    exact-integer-weight result."""
+    exact-integer-weight result, for every measure's band and with
+    and without the self-join orientation."""
     import sparksimjoin.joins.core as core
-    from sparksimjoin.joins.weighted import weighted_jaccard_join
+    from sparksimjoin.joins import weighted
 
+    join = getattr(weighted, f"weighted_{measure}_join")
     corpus = _dense_corpus(spark)
-    dense = weighted_jaccard_join(corpus, corpus, "id", "id", "text", "text",
-                                  WS, 0.5, self_join=True)
+    dense = join(corpus, corpus, "id", "id", "text", "text", WS, 0.5,
+                 self_join=self_join)
     monkeypatch.setattr(core, "DENSE_ALLPAIRS_CAP", 0)
-    blocked = weighted_jaccard_join(corpus, corpus, "id", "id", "text",
-                                    "text", WS, 0.5, self_join=True)
+    blocked = join(corpus, corpus, "id", "id", "text", "text", WS, 0.5,
+                   self_join=self_join)
     assert _n_bnl(dense) == _n_bnl(blocked) + 1
     got_dense = _pairs(dense)
     got_blocked = _pairs(blocked)

@@ -237,10 +237,9 @@ def test_cap_advisor_exact_and_sound(spark):
 
 
 def test_cap_zero_rejected(spark):
-    """stop_token_cap=0 means 'disabled' to the joins/pipeline
-    (truthiness check) but would mean 'cap everything' to the
-    advisory — an unrunnable configuration, so the estimator rejects
-    it (round-5 review fix; same contract as resolve_salt_cap)."""
+    """A stop_token_cap below 1 would exclude every token, so the
+    estimator rejects it, as the joins and the linkage drivers do
+    (one check: joins/core.check_stop_token_cap)."""
     df = spark.createDataFrame([(1, "a b"), (2, "b c")], ["id", "name"])
     for bad in (0, -3):
         with pytest.raises(ValueError, match="stop_token_cap"):

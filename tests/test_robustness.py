@@ -276,3 +276,24 @@ def test_dup_factor_size_biased_skew(spark):
     )
     assert abs(dup_factor(withnull, "t") - 1.0) < 1e-6
     assert dup_factor(withnull.where("t IS NULL AND t IS NOT NULL"), "t") == 0
+
+
+def test_stop_token_cap_below_one_rejected(spark, tiny, tmp_path):
+    """A stop_token_cap below 1 would exclude every token (each has
+    doc frequency >= 1), so the join and the linkage pipeline reject
+    it; the pipeline does so before it writes any stage."""
+    from sparksimjoin import set_sim_join
+    from sparksimjoin.fixtures import make_transcripts
+    from sparksimjoin.pipeline import PipelineConfig, run_pipeline
+
+    for cap in (0, -1):
+        with pytest.raises(ValueError, match="stop_token_cap"):
+            set_sim_join(tiny, tiny, "id", "id", "name", "name", WS, 0.5,
+                         "JACCARD", self_join=True, dedup_strings=False,
+                         stop_token_cap=cap)
+    t_pdf, _ = make_transcripts(10, seed=5)
+    wd = tmp_path / "wd"
+    with pytest.raises(ValueError, match="stop_token_cap"):
+        run_pipeline(spark, spark.createDataFrame(t_pdf), str(wd),
+                     PipelineConfig(stop_token_cap=-1))
+    assert not wd.exists() or not any(wd.iterdir())

@@ -62,8 +62,15 @@ def _docs_df(spark, docs):
     )
 
 
-def test_self_join_brute_force_parity(spark):
+@pytest.mark.parametrize("dot", ["bigint", "decimal"])
+def test_self_join_brute_force_parity(spark, monkeypatch, dot):
+    """Both arms of the adaptive exact dot: the default corpus runs the
+    BIGINT aggregate; the ``decimal`` arm patches BIGINT_DOT_BOUND to 0
+    so the DECIMAL(38,0) fallback runs, and its scores must be
+    bit-identical to the BIGINT arm's."""
     import random
+
+    import sparksimjoin.joins.tfidf as tfidf_mod
 
     rng = random.Random(37)
     vocab = [f"w{i}" for i in range(30)]
@@ -74,16 +81,27 @@ def test_self_join_brute_force_parity(spark):
     docs[80] = None
     docs[81] = "   "
     d = _docs_df(spark, docs)
+
+    def scores(t):
+        out = tfidf_join(d, d, "doc_id", "doc_id", "text", "text", WS, t,
+                         self_join=True)
+        # only the DECIMAL dot intersects the tid arrays
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert ("array_intersect" in plan) == (
+            tfidf_mod.BIGINT_DOT_BOUND == 0), t
+        return {(r.l_id, r.r_id): r._sim_score for r in out.collect()}
+
     for t in (0.35, 0.6, 0.85):
-        got = {
-            (r.l_id, r.r_id): r._sim_score
-            for r in tfidf_join(
-                d, d, "doc_id", "doc_id", "text", "text", WS, t, self_join=True
-            ).collect()
-        }
+        if dot == "decimal":
+            bigint = scores(t)
+            monkeypatch.setattr(tfidf_mod, "BIGINT_DOT_BOUND", 0)
+        got = scores(t)
         want = _brute(docs, docs, t, self_join=True)
         assert got.keys() == want.keys(), (t, got.keys() ^ want.keys())
         assert all(abs(got[k] - want[k]) < 1e-12 for k in got)
+        if dot == "decimal":
+            assert got == bigint, t
+            monkeypatch.undo()
 
 
 def test_two_table_shared_weight_space(spark):
