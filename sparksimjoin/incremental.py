@@ -71,6 +71,7 @@ from .cache import scoped_caches, track
 from .checkpoint import CheckpointManager
 from .clustering import connected_components
 from .joins.core import (
+    LazyObservedMetric,
     build_salt_map,
     candidate_pairs,
     check_stop_token_cap,
@@ -310,26 +311,21 @@ def _run_stages(
         # empty-relation propagation can still delete the whole
         # CollectMetrics subtree when the (new x base) join output is
         # empty (e.g. a batch sharing no tokens with the base), so the
-        # resolver falls back to one cheap count job over the small
+        # metric falls back to one cheap count job over the small
         # batch postings in that degenerate case.
         from pyspark.sql import Observation
 
         obs_vocab = Observation()
-        batch_vocab = ex_new_l.select("token").distinct().observe(
+        vocab = ex_new_l.select("token").distinct()
+        batch_vocab = vocab.observe(
             obs_vocab, F.count(F.lit(1)).alias("batch_prefix_vocab")
         )
         sentinel = spark.range(1).select(F.lit(-2).cast("bigint").alias("token"))
         ex_base_r = ex_base_r.join(
             F.broadcast(batch_vocab.unionAll(sentinel)), "token", "left_semi"
         )
-
-        def _vocab_metric() -> int:
-            try:
-                return int(obs_vocab.get["batch_prefix_vocab"])
-            except Exception:
-                return ex_new_l.select("token").distinct().count()
-
-        cand_extra["batch_prefix_vocab"] = _vocab_metric
+        cand_extra["batch_prefix_vocab"] = LazyObservedMetric(
+            obs_vocab, "batch_prefix_vocab", vocab).resolve
         if cfg.stop_token_cap is not None:
             (ex_new_l, ex_new_r, ex_base_r), dropped = exclude_stop_tokens(
                 ranks, cfg.stop_token_cap, ex_new_l, ex_new_r, ex_base_r)

@@ -83,16 +83,25 @@ class LazyObservedMetric:
     eager ``stop.count()`` added a driver-synchronized job per capped
     join). Resolves on first numeric access; reading it BEFORE any
     action has materialized the observed plan raises RuntimeError.
+
+    ``fallback``: a frame whose row count is the metric. AQE's
+    empty-relation propagation can prune the ``CollectMetrics`` node
+    when the consuming query's output is empty; the metric then never
+    fires, and ``fallback.count()`` (one job, paid only in that case)
+    answers instead of the RuntimeError.
     """
 
-    def __init__(self, observation, key: str):
+    def __init__(self, observation, key: str, fallback: DataFrame | None = None):
         self._obs = observation
         self._key = key
+        self._fallback = fallback
 
     def resolve(self) -> int:
         try:
             return int(self._obs.get[self._key])
-        except Exception as e:  # pragma: no cover - defensive
+        except Exception as e:
+            if self._fallback is not None:
+                return int(self._fallback.count())
             raise RuntimeError(
                 f"observed metric {self._key!r} has not fired — run an "
                 "action on the join output before reading metrics_out"
@@ -176,7 +185,9 @@ def exclude_stop_tokens(ranks: DataFrame, cap: int, *frames: DataFrame):
     row (no real token id is negative) keeps the broadcast non-empty
     even when NO token exceeds the cap — otherwise AQE's empty-relation
     propagation deletes the anti-join and the CollectMetrics node with
-    it, and the metric never fires."""
+    it, and the metric never fires. When the cap excludes EVERY prefix
+    token the consuming query is empty and AQE prunes the node anyway;
+    the metric then counts the stop list."""
     from pyspark.sql import Observation
 
     stop = ranks.where(F.col("cnt") > cap).select(F.col("tid").alias("token"))
@@ -188,7 +199,7 @@ def exclude_stop_tokens(ranks: DataFrame, cap: int, *frames: DataFrame):
     stop_b = F.broadcast(observed.unionAll(sentinel))
     return (
         tuple(f.join(stop_b, "token", "left_anti") for f in frames),
-        LazyObservedMetric(obs, "dropped_stop_tokens"),
+        LazyObservedMetric(obs, "dropped_stop_tokens", stop),
     )
 
 
@@ -1175,8 +1186,6 @@ def candidate_pairs(
     qval: int = 2,
     self_join: bool = False,
     salt_map: DataFrame | None = None,
-    extra_predicate: Column | None = None,
-    position_filter: bool = True,
 ) -> DataFrame:
     """Blocked candidates of a prefix-filtered join
     (:func:`blocked_pairs`) with the size-bound and PPJoin position-
@@ -1186,17 +1195,13 @@ def candidate_pairs(
     ``1 + min(s1 - lpos, s2 - rpos) >= req``. Sound for bag-tokenized
     edit distance too (no set-semantics assumption)."""
     lo, hi = size_bounds_expr(F.col("l_size"), measure, threshold)
-    cond = F.col("r_size").between(lo, hi)
-    if position_filter:
-        req = overlap_threshold_expr(F.col("l_size"), F.col("r_size"), measure, threshold, qval)
-        bound = 1 + F.least(
-            F.col("l_size") - F.col("l_pos"), F.col("r_size") - F.col("r_pos")
-        )
-        cond = cond & (bound.cast("double") >= req)
+    req = overlap_threshold_expr(F.col("l_size"), F.col("r_size"), measure, threshold, qval)
+    bound = 1 + F.least(
+        F.col("l_size") - F.col("l_pos"), F.col("r_size") - F.col("r_pos")
+    )
+    cond = F.col("r_size").between(lo, hi) & (bound.cast("double") >= req)
     if self_join:
         cond = cond & (F.col("l_id") < F.col("r_id"))
-    if extra_predicate is not None:
-        cond = cond & extra_predicate
     return blocked_pairs(ex_l, ex_r, salt_map, cond)
 
 

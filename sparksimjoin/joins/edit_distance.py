@@ -94,7 +94,7 @@ def edit_distance_join(
     # so the join sees an occurrence where the bound holds.
     cand = candidate_pairs(
         ex_l, ex_r, EDIT_DISTANCE, band, qval=q,
-        self_join=self_join, salt_map=salt_map, position_filter=True,
+        self_join=self_join, salt_map=salt_map,
     )
 
     # short-record branch: records with <= q*band grams can defeat the

@@ -134,7 +134,7 @@ def _jaro_join(
     # set semantics, exactly as for edit distance)
     cand = candidate_pairs(
         ex_l, ex_r, JARO_CHAR, c,
-        self_join=self_join, salt_map=salt_map, position_filter=True,
+        self_join=self_join, salt_map=salt_map,
     )
 
     # verify on the ORIGINAL strings (joins/core.verify_strings, the

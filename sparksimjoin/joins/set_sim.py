@@ -72,7 +72,6 @@ def set_sim_join(
     self_join: bool = False,
     salt_cap: int | None = None,
     dense_id: bool = False,
-    position_filter: bool = True,
     dedup_strings: bool | str = "auto",
     stop_token_cap: int | None = None,
     candidate_budget: int | None = None,
@@ -175,7 +174,7 @@ def set_sim_join(
         salt_map = build_salt_map(ranks, resolved_salt_cap)
         cand = candidate_pairs(
             ex_l, ex_r, measure, threshold,
-            self_join=self_join, salt_map=salt_map, position_filter=position_filter,
+            self_join=self_join, salt_map=salt_map,
         )
     # the candidate funnel above ran on dense-long iids (with_iid);
     # verify decodes back to original ids through its prep joins and

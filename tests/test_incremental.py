@@ -132,6 +132,29 @@ def test_base_prune_metric_and_disjoint_vocab(spark, tmp_path):
     assert 1 <= m["batch_prefix_vocab"] <= 3  # <= |{eta, theta, iota}|
 
 
+def test_stop_token_cap_excluding_every_token(spark, tmp_path):
+    """A cap that excludes every prefix token empties the batch funnel,
+    so AQE prunes both observed metrics' CollectMetrics nodes; the
+    candidates stage is still written, empty, with both metrics
+    counted from their fallback frames."""
+    from sparksimjoin.checkpoint import CheckpointManager
+
+    # each conversation twice in the base and once more in the batch:
+    # every token has base doc frequency >= 2 > cap
+    t_pdf, _ = make_transcripts(10, seed=5)
+    cfg = replace(CFG, stop_token_cap=1)
+    base = pd.concat([t_pdf, t_pdf.assign(conv_id=t_pdf["conv_id"] + "_dup")],
+                     ignore_index=True)
+    new = t_pdf.assign(conv_id=t_pdf["conv_id"] + "_new")
+    run_pipeline(spark, spark.createDataFrame(base), str(tmp_path / "base"), cfg)
+    run_incremental(spark, spark.createDataFrame(new), str(tmp_path / "base"),
+                    str(tmp_path / "inc"), cfg)
+    m = CheckpointManager(spark, str(tmp_path / "inc")).manifest("candidates")
+    assert m["rows"] == 0
+    assert m["dropped_stop_tokens"] > 0
+    assert m["batch_prefix_vocab"] > 0
+
+
 def test_incremental_resume_identical(spark, split, tmp_path):
     """Kill-after-candidates resume inside the incremental dir: later
     stages recompute, result identical (same contract as

@@ -46,10 +46,29 @@ def _labeled_feature_pairs(spark):
     return feats, eid
 
 
-@pytest.mark.parametrize("model", ["logistic", "random_forest"])
-def test_separable_corpus_perfect_f1(spark, model):
+@pytest.fixture(scope="module")
+def labeled(spark):
+    """(feats, eid), the features cached once for the whole module."""
     feats, eid = _labeled_feature_pairs(spark)
-    m = train_match_model(feats, model=model, seed=7)
+    feats = feats.cache()
+    feats.count()
+    yield feats, eid
+    feats.unpersist()
+
+
+@pytest.fixture(scope="module")
+def logistic(labeled):
+    """The one seed-7 logistic model shared by the tests that only
+    score it (``train_match_model`` strips its summary, so scoring
+    never mutates it)."""
+    return train_match_model(labeled[0], seed=7)
+
+
+@pytest.mark.parametrize("model", ["logistic", "random_forest"])
+def test_separable_corpus_perfect_f1(labeled, logistic, model):
+    feats, eid = labeled
+    m = logistic if model == "logistic" else train_match_model(
+        feats, model=model, seed=7)
     out = apply_ml_matcher(m, feats.drop("label"))
     got = {(r.l_id, r.r_id) for r in out.collect() if r._match == 1}
     want = {(a, b) for a in eid for b in eid if a < b and eid[a] == eid[b]}
@@ -60,8 +79,8 @@ def test_separable_corpus_perfect_f1(spark, model):
     assert all(probs[p] < 0.2 for p in set(probs) - want)
 
 
-def test_prediction_determinism(spark):
-    feats, _ = _labeled_feature_pairs(spark)
+def test_prediction_determinism(labeled):
+    feats, _ = labeled
     m1 = train_match_model(feats, seed=7)
     m2 = train_match_model(feats, seed=7)
     o1 = sorted((r.l_id, r.r_id, r._match)
@@ -71,9 +90,9 @@ def test_prediction_determinism(spark):
     assert o1 == o2
 
 
-def test_null_features_are_imputed(spark):
-    feats, _ = _labeled_feature_pairs(spark)
-    m = train_match_model(feats, seed=7)
+def test_null_features_are_imputed(labeled, logistic):
+    feats, _ = labeled
+    m = logistic
     from pyspark.sql import functions as F
 
     # knock out a feature on some rows: scoring must not raise and
@@ -86,11 +105,11 @@ def test_null_features_are_imputed(spark):
     assert out.where(F.col("_match_prob").isNull()).count() == 0
 
 
-def test_model_save_load_roundtrip(spark, tmp_path):
+def test_model_save_load_roundtrip(labeled, logistic, tmp_path):
     from pyspark.ml import PipelineModel
 
-    feats, _ = _labeled_feature_pairs(spark)
-    m = train_match_model(feats, seed=7)
+    feats, _ = labeled
+    m = logistic
     path = str(tmp_path / "match_model")
     m.write().overwrite().save(path)
     m2 = PipelineModel.load(path)
@@ -101,8 +120,8 @@ def test_model_save_load_roundtrip(spark, tmp_path):
     assert a == b
 
 
-def test_validation_errors(spark):
-    feats, _ = _labeled_feature_pairs(spark)
+def test_validation_errors(labeled):
+    feats, _ = labeled
     with pytest.raises(ValueError):
         train_match_model(feats, model="svm")
     with pytest.raises(AssertionError):
@@ -155,7 +174,7 @@ def test_sample_pairs_empty_and_degenerate(spark):
     assert 1 <= len(out) <= 3
 
 
-def test_ml_survives_session_observation(spark):
+def test_ml_survives_session_observation(spark, labeled):
     """Round-4 regression: Spark 4.1's classic SparkSession holds a
     lazily-materialized, NON-transient, non-serializable
     ``observationManager``. It is null (and harmless) until the
@@ -169,8 +188,9 @@ def test_ml_survives_session_observation(spark):
     the session FIRST and asserts the full fit+score path still runs.
     (A LocalRelation-only plan would dodge the bug via driver-side
     ConvertToLocalRelation evaluation — _labeled_feature_pairs goes
-    through real joins/shuffles, which is what makes this a
-    regression test and not a vacuous one.)"""
+    through real joins/shuffles, and the module's cached copy is
+    scanned by executor tasks, which is what makes this a regression
+    test and not a vacuous one.)"""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
@@ -178,7 +198,7 @@ def test_ml_survives_session_observation(spark):
     spark.range(100).observe(obs, F.count(F.lit(1)).alias("n")).count()
     assert obs.get["n"] == 100  # observation really registered
 
-    feats, eid = _labeled_feature_pairs(spark)
+    feats, eid = labeled
     m = train_match_model(feats, seed=7)
     assert not m.stages[-1].hasSummary  # summary stripped at fit time
     out = apply_ml_matcher(m, feats.drop("label"))
@@ -187,7 +207,7 @@ def test_ml_survives_session_observation(spark):
     assert got == want
 
 
-def test_apply_warns_once_when_stripping_caller_summary(spark):
+def test_apply_warns_once_when_stripping_caller_summary(labeled, logistic):
     """apply_ml_matcher mutates a caller-supplied model in place
     (clearing JVM training summaries). That trade-off is deliberate
     (see _strip_training_summaries), but it must be AUDIBLE: exactly
@@ -202,7 +222,7 @@ def test_apply_warns_once_when_stripping_caller_summary(spark):
 
     from sparksimjoin.ml import _feature_cols, _prep
 
-    feats, _ = _labeled_feature_pairs(spark)
+    feats, _ = labeled
     cols = _feature_cols(feats, None)
     asm = VectorAssembler(inputCols=cols, outputCol="__features")
     clf = LogisticRegression(featuresCol="__features", labelCol="label")
@@ -216,7 +236,6 @@ def test_apply_warns_once_when_stripping_caller_summary(spark):
         warnings.simplefilter("error", UserWarning)
         apply_ml_matcher(raw, feats.drop("label")).count()
     # the in-house training path never warns (strips at fit time)
-    m = train_match_model(feats, seed=3)
     with warnings.catch_warnings():
         warnings.simplefilter("error", UserWarning)
-        apply_ml_matcher(m, feats.drop("label")).count()
+        apply_ml_matcher(logistic, feats.drop("label")).count()

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import shutil
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -137,6 +138,21 @@ def test_stop_token_cap_metrics(spark, transcripts, tmp_path):
     m_lo = CheckpointManager(spark, wd_lo).manifest("candidates")
     assert m_lo["dropped_stop_tokens"] > 0
     assert m_lo["stop_token_cap"] == 50
+
+    # every conversation duplicated: each token has doc frequency >= 2,
+    # so cap 1 excludes every prefix token and empties the funnel (AQE
+    # then prunes the metric's CollectMetrics node)
+    wd_all = str(tmp_path / "all")
+    run_pipeline(spark, _duplicated(spark), wd_all, replace(CFG, stop_token_cap=1))
+    m_all = CheckpointManager(spark, wd_all).manifest("candidates")
+    assert m_all["rows"] == 0
+    assert m_all["dropped_stop_tokens"] > 0
+
+
+def _duplicated(spark):
+    t_pdf, _ = make_transcripts(10, seed=5)
+    dup = t_pdf.assign(conv_id=t_pdf["conv_id"] + "_dup")
+    return spark.createDataFrame(pd.concat([t_pdf, dup], ignore_index=True))
 
 
 def test_clusters_iid_space_cc_parity(spark, transcripts, tmp_path):
