@@ -14,6 +14,13 @@ Cases:
   (0.9) joins on ``part.p_name`` with ``dedup_strings=True`` and
   ``allow_missing=True``; ``same`` passes one frame as both sides,
   ``half`` joins ``part`` with its even-key half;
+- ``{overlap,size,prefix,position,suffix}_filter_part_half``: each
+  filter's two-table ``filter_tables`` on ``part.p_name`` against its
+  even-key half, built as in the oracle queries (overlap size 2;
+  JACCARD 0.8 size and position, 0.7 prefix and suffix; size and
+  prefix with ``allow_empty=False``), and ``position_candset_part_half``:
+  the position filter's ``filter_candset`` over the overlap filter's
+  candset of the same two tables;
 - ``<linkage case>/<stage>``: the frame of every ``CheckpointManager.write``
   (wrapped here; the library is not instrumented) of ``run_pipeline``
   over ``make_transcripts(60, seed=5)`` at threshold 0.6 (``default``,
@@ -124,6 +131,13 @@ def digest_cases(sf: str, tmp: str) -> dict[str, dict]:
     )
     from sparksimjoin.cache import release_all
     from sparksimjoin.checkpoint import CheckpointManager
+    from sparksimjoin.filters import (
+        OverlapFilter,
+        PositionFilter,
+        PrefixFilter,
+        SizeFilter,
+        SuffixFilter,
+    )
     from sparksimjoin.fixtures import make_transcripts
     from sparksimjoin.incremental import run_incremental
     from sparksimjoin.joins.weighted import weighted_cosine_join, weighted_dice_join
@@ -146,12 +160,30 @@ def digest_cases(sf: str, tmp: str) -> dict[str, dict]:
         release_all()
 
     part = spark.read.parquet(f"{sf}/part.parquet")
-    for rname, r in (("same", part), ("half", part.where(F.col("p_partkey") % 2 == 0))):
+    half = part.where(F.col("p_partkey") % 2 == 0)
+    for rname, r in (("same", part), ("half", half)):
         for jname, join, k in (("hamming", hamming_join, 2), ("jaro", jaro_join, 0.9)):
             record(f"{jname}_part_{rname}", join(
                 part, r, "p_partkey", "p_partkey", "p_name", "p_name", k,
                 allow_missing=True, dedup_strings=True))
             release_all()
+
+    ws = WhitespaceTokenizer()
+    part_attrs = ("p_partkey", "p_partkey", "p_name", "p_name")
+    filters = {
+        "overlap": OverlapFilter(ws, overlap_size=2),
+        "size": SizeFilter(ws, "JACCARD", 0.8, allow_empty=False),
+        "prefix": PrefixFilter(ws, "JACCARD", 0.7, allow_empty=False),
+        "position": PositionFilter(ws, "JACCARD", 0.8),
+        "suffix": SuffixFilter(ws, "JACCARD", 0.7),
+    }
+    for fname, f in filters.items():
+        record(f"{fname}_filter_part_half", f.filter_tables(part, half, *part_attrs))
+        release_all()
+    cand = filters["overlap"].filter_tables(part, half, *part_attrs)
+    record("position_candset_part_half", filters["position"].filter_candset(
+        cand, "l_p_partkey", "r_p_partkey", part, half, *part_attrs))
+    release_all()
 
     t_pdf, _ = make_transcripts(60, seed=5)
     convs = sorted(t_pdf["conv_id"].unique())
@@ -189,7 +221,6 @@ def digest_cases(sf: str, tmp: str) -> dict[str, dict]:
         stop_token_cap=50, metrics_out={}))
     release_all()
 
-    ws = WhitespaceTokenizer()
     joins = {
         "tfidf_self": lambda d, h: tfidf_join(d, d, "id", "id", "text", "text", ws,
                                               0.5, self_join=True),

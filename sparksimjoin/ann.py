@@ -2,10 +2,10 @@
 task brief): brute-force cosine top-k as the exactness baseline, and
 a random-hyperplane LSH-bucketed variant as the scale path.
 
-Scoring is vectorized numpy over Arrow batches (pandas UDFs) — the
-Column-expression dot product via ``F.aggregate`` is an interpreted
-higher-order function, ~100x slower at pair volume, so it is kept
-only for the tiny per-record bucket signatures.
+Scoring and the LSH bucket signatures are vectorized numpy over
+Arrow batches (pandas UDFs) — a Column-expression dot product via
+``F.aggregate`` is an interpreted higher-order function, ~100x slower
+at pair volume.
 
 ``brute_force_topk`` is fully distributed: a block nested-loop over
 (query-chunk x base-chunk) cogroups, each task doing one numpy matmul
@@ -22,52 +22,8 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-
-
-def cosine_sim_expr(a: Column, b: Column) -> Column:
-    ad = F.transform(a, lambda x: x.cast("double"))
-    bd = F.transform(b, lambda x: x.cast("double"))
-    return _dot(ad, bd) / (_norm(ad) * _norm(bd))
-
-
-_COSINE_UDF = None
-
-
-def cosine_pandas(a: Column, b: Column) -> Column:
-    """Row-wise cosine of two array columns, numpy-vectorized per
-    Arrow batch — a utility for scoring an existing pair table (the
-    ANN probes themselves score in-kernel via ``_partial_topk``; this
-    row-wise form moves both vectors per pair, so keep it off
-    candidate-volume paths). UDF built lazily — the pandas_udf
-    decorator needs an active session to parse its DDL."""
-    global _COSINE_UDF
-    if _COSINE_UDF is None:
-
-        @F.pandas_udf("double")
-        def _udf(x: pd.Series, y: pd.Series) -> pd.Series:
-            if len(x) == 0:
-                return pd.Series([], dtype=float)
-            am = np.array(x.tolist(), dtype=np.float64)
-            bm = np.array(y.tolist(), dtype=np.float64)
-            num = np.einsum("ij,ij->i", am, bm)
-            den = np.linalg.norm(am, axis=1) * np.linalg.norm(bm, axis=1)
-            return pd.Series(num / den)
-
-        _COSINE_UDF = _udf
-    return _COSINE_UDF(a, b)
 
 
 def _partial_topk(qm, q_ids, bm, b_ids, k):
@@ -188,20 +144,6 @@ def brute_force_topk(
 def _planes(dim: int, n_planes: int, seed: int) -> np.ndarray:
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_planes, dim))
-
-
-def lsh_bucket_expr(vec: Column, planes: np.ndarray) -> Column:
-    """Random-hyperplane signature: bit p = sign(dot(vec, plane_p)).
-    Column-expression form — fine for a handful of planes; for the
-    multi-table bucket stage use _lsh_buckets (the literal-array
-    expression tree grows as tables*planes*dim and its codegen
-    compilation dominates tiny inputs)."""
-    vd = F.transform(vec, lambda x: x.cast("double"))
-    sig = F.lit(0).cast("long")
-    for p, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(float(c)) for c in plane])
-        sig = sig + F.when(_dot(vd, lit_plane) > 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return sig
 
 
 def _lsh_buckets(

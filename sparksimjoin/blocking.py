@@ -300,7 +300,7 @@ def phonetic_candidates(
     semantics (the bucket pairs ARE the candidates); the mandatory
     hot-code salt splits big buckets across tasks for parallelism.
     Score the output with ``apply_matcher``."""
-    from .joins.core import apply_salt, build_salt_map, resolve_salt_cap
+    from .joins.core import build_salt_map, meeting_join, resolve_salt_cap
 
     if encoding == "soundex":
         code = soundex_expr(F.col(attr))
@@ -316,11 +316,8 @@ def phonetic_candidates(
     salt_map = build_salt_map(freq, resolve_salt_cap(salt_cap), key_col="token")
     ex_l = coded.select(F.col("__id").alias("l_id"), "token")
     ex_r = coded.select(F.col("__id").alias("r_id"), "token")
-    ex_l, ex_r, join_keys = apply_salt(ex_l, ex_r, salt_map)
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return (
-        ex_l.repartition(n_part, *join_keys)
-        .join(ex_r.repartition(n_part, *join_keys), join_keys)
+        meeting_join(ex_l, ex_r, salt_map)
         .where(F.col("l_id") < F.col("r_id"))
         .select("l_id", "r_id", F.col("token").alias(encoding))
     )

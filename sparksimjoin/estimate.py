@@ -30,8 +30,13 @@ Definitions shared with the join (joins/core.py):
   dedup pre-pass, position bound, and verification — i.e. the upper
   bound of the candidate shuffle, which is what capacity planning
   needs. The accumulated-bound / dedup passes only shrink it.
-- ``hot_tokens``: prefix tokens whose pdf exceeds ``salt_cap``
-  (default AUTO_SALT_CAP) — exactly the tokens the join will salt.
+- ``hot_tokens``: prefix tokens whose per-side prefix posting list
+  (pdf, the larger side's for R x S) exceeds ``salt_cap`` (default
+  AUTO_SALT_CAP) — the tokens whose meetings concentrate in one join
+  cell. It is not the join's salt list: the join salts tokens by
+  GLOBAL document frequency over both inputs (``build_salt_map`` on
+  the rank table's ``cnt``), which counts every record holding the
+  token, not only those holding it in their prefix.
 """
 
 from __future__ import annotations
@@ -76,8 +81,9 @@ def estimate_join_cost(
       the blocking stage emits (pre-dedup/bound upper bound),
     - ``max_token_candidates``: the largest single token's meetings
       — the stage's serialization risk if unsalted,
-    - ``hot_tokens``: prefix tokens with pdf > ``salt_cap`` (the
-      ones the join will split).
+    - ``hot_tokens``: prefix tokens with pdf > ``salt_cap`` (per-side
+      prefix posting lists; the join itself salts by global document
+      frequency, module docstring).
 
     Linear cost: no pair is ever materialized. EDIT_DISTANCE is
     rejected (its blocking is band-structured, not df-structured).

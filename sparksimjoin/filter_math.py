@@ -76,12 +76,6 @@ def guarded_floor_expr(x: Column) -> Column:
     return F.floor(x + F.greatest(F.abs(x), F.lit(1.0)) * F.lit(GUARD_EPS))
 
 
-def guard_sql(x: str, fn: str = "ceil") -> str:
-    """DuckDB spelling of the same guard, for oracle parity."""
-    sign = "-" if fn == "ceil" else "+"
-    return f"{fn}({x} {sign} greatest(abs({x}), 1.0) * 1e-12)"
-
-
 # ---------------------------------------------------------------- python
 def prefix_length_py(num_tokens: int, measure: str, threshold: float, qval: int = 2) -> int:
     if num_tokens == 0:

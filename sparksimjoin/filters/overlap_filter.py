@@ -1,7 +1,8 @@
 """OverlapFilter (``[R] py_stringsimjoin/filter/overlap_filter.py``;
 SURVEY.md §2.1 #7). Table mode is a pure-DataFrame plan: explode
-distinct tokens both sides -> equi-join on token -> groupBy pair ->
-count comp_op overlap_size. No UDF anywhere."""
+distinct tokens both sides -> the joins' salted, pinned meeting join
+on token (``joins/core.meeting_join``) -> groupBy pair -> count
+comp_op overlap_size. No UDF anywhere."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..filter_math import COMP_OP_MAP, COMP_OP_PY
+from ..joins import core
 from ..tokenizers import Tokenizer
 from .base import Filter
 
@@ -28,31 +30,19 @@ class OverlapFilter(Filter):
         self.comp_op = comp_op
         self.allow_missing = allow_missing
 
-    def filter_pair(self, l_string, r_string) -> bool:
-        if l_string is None or r_string is None:
-            return not self.allow_missing
-        tok = self._coerced_tokenizer()
-        o = len(set(tok.tokenize(l_string)) & set(tok.tokenize(r_string)))
-        return not COMP_OP_PY[self.comp_op](o, self.overlap_size)
+    def _drop_tokens(self, lt, rt) -> bool:
+        return not COMP_OP_PY[self.comp_op](len(set(lt) & set(rt)), self.overlap_size)
 
     def _survivor_pairs(self, prep_l, prep_r, ranks) -> DataFrame:
-        from ..joins.core import AUTO_SALT_CAP, apply_salt, build_salt_map
-
         ex_l = prep_l.select(F.col("id").alias("l_id"), F.explode("tokens").alias("token"))
         ex_r = prep_r.select(F.col("id").alias("r_id"), F.explode("tokens").alias("token"))
-        # mandatory hot-token salt (same as candidate_pairs): the left
-        # row of a hot token lands in ONE salt bucket and the right
-        # rows replicate across all buckets, so each (l_id, r_id,
-        # token) triple still meets EXACTLY once — the per-pair
-        # overlap count is unchanged (test_filters_salted).
-        ex_l, ex_r, join_keys = apply_salt(
-            ex_l, ex_r, build_salt_map(ranks, AUTO_SALT_CAP)
-        )
-        n_part = int(prep_l.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        ex_l = ex_l.repartition(n_part, *join_keys)
-        ex_r = ex_r.repartition(n_part, *join_keys)
+        # the joins' salted, pinned meeting join: the left row of a hot
+        # token lands in ONE salt bucket and the right rows replicate
+        # across all buckets, so each (l_id, r_id, token) triple still
+        # meets EXACTLY once — the per-pair overlap count is unchanged
+        # (test_filters_salted).
         counted = (
-            ex_l.join(ex_r, join_keys)
+            core.meeting_join(ex_l, ex_r, core.build_salt_map(ranks, core.AUTO_SALT_CAP))
             .groupBy("l_id", "r_id")
             .agg(F.count("*").alias("_overlap"))
         )

@@ -6,79 +6,27 @@ predicates (positions ride along in the explode)."""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..filter_math import (
-    SET_SIM_MEASURES,
-    overlap_threshold_py,
-    prefix_length_py,
-    size_lower_bound_py,
-    size_upper_bound_py,
-)
-from ..joins.core import candidate_pairs, prefix_explode
-from ..tokenizers import Tokenizer
-from .base import Filter
+from ..filter_math import overlap_threshold_py
+from ..joins.core import candidate_pairs
+from .base import SetSimFilter
 
 
-class PositionFilter(Filter):
-    def __init__(
-        self,
-        tokenizer: Tokenizer,
-        sim_measure_type: str,
-        threshold: float,
-        allow_empty: bool = True,
-        allow_missing: bool = False,
-    ):
-        assert sim_measure_type in SET_SIM_MEASURES, sim_measure_type
-        self.tokenizer = tokenizer
-        self.sim_measure_type = sim_measure_type
-        self.threshold = threshold
-        self.allow_empty = allow_empty
-        self.allow_missing = allow_missing
-
-    def filter_pair(self, l_string, r_string) -> bool:
-        if l_string is None or r_string is None:
-            return not self.allow_missing
-        tok = self._coerced_tokenizer()
-        lt, rt = tok.tokenize(l_string), tok.tokenize(r_string)
-        if len(lt) == 0 and len(rt) == 0:
-            return not self.allow_empty
-        from collections import Counter
-
-        cnt = Counter(lt) + Counter(rt)
-        order = {t: (c, t) for t, c in cnt.items()}
-        lo_ = sorted(lt, key=lambda t: order[t])
-        ro_ = sorted(rt, key=lambda t: order[t])
-        s1, s2 = len(lo_), len(ro_)
-        lo_b = size_lower_bound_py(s1, self.sim_measure_type, self.threshold)
-        hi_b = size_upper_bound_py(s1, self.sim_measure_type, self.threshold)
-        if not (lo_b <= s2 <= hi_b):
+class PositionFilter(SetSimFilter):
+    def _drop_ordered(self, lo, ro) -> bool:
+        s1, s2 = len(lo), len(ro)
+        if self._size_out(s1, s2):
             return True
-        lp = lo_[: prefix_length_py(s1, self.sim_measure_type, self.threshold)]
-        rp = ro_[: prefix_length_py(s2, self.sim_measure_type, self.threshold)]
+        lp, rp = self._prefix(lo), self._prefix(ro)
         req = overlap_threshold_py(s1, s2, self.sim_measure_type, self.threshold)
-        lpos = {t: i + 1 for i, t in enumerate(lp) if t not in {x for x in lp[:i]}}
-        for t, p1 in lpos.items():
+        for p1, t in enumerate(lp, 1):
             if t in rp:
                 p2 = rp.index(t) + 1
                 if 1 + min(s1 - p1, s2 - p2) >= req:
                     return False
         return True
 
-    def _survivor_pairs(self, prep_l, prep_r, ranks) -> DataFrame:
-        from ..joins.core import AUTO_SALT_CAP, build_salt_map
-
-        # id_col='id': filter table mode hands survivor ids straight
-        # to its output without a prep join, so it stays in
-        # original-id space (the joins' funnel uses iid surrogates)
-        ex_l = prefix_explode(prep_l, "l", self.sim_measure_type, self.threshold,
-                              id_col="id")
-        ex_r = prefix_explode(prep_r, "r", self.sim_measure_type, self.threshold,
-                              id_col="id")
-        pairs = candidate_pairs(ex_l, ex_r, self.sim_measure_type, self.threshold,
-                                salt_map=build_salt_map(ranks, AUTO_SALT_CAP))
-        if self.allow_empty:
-            el = prep_l.where(F.col("size") == 0).select(F.col("id").alias("l_id"))
-            er = prep_r.where(F.col("size") == 0).select(F.col("id").alias("r_id"))
-            pairs = pairs.unionByName(el.crossJoin(er))
-        return pairs
+    def _nonempty_pairs(self, prep_l, prep_r, ranks) -> DataFrame:
+        ex_l, ex_r, salt_map = self._prefix_postings(prep_l, prep_r, ranks)
+        return candidate_pairs(ex_l, ex_r, self.sim_measure_type, self.threshold,
+                               salt_map=salt_map)

@@ -9,45 +9,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..filter_math import (
-    COMP_OP_PY,
-    SET_SIM_MEASURES,
-    size_bounds_expr,
-    size_lower_bound_py,
-    size_upper_bound_py,
-)
-from ..tokenizers import Tokenizer
-from .base import Filter
+from ..filter_math import size_bounds_expr
+from .base import SetSimFilter
 
 
-class SizeFilter(Filter):
-    def __init__(
-        self,
-        tokenizer: Tokenizer,
-        sim_measure_type: str,
-        threshold: float,
-        allow_empty: bool = True,
-        allow_missing: bool = False,
-    ):
-        assert sim_measure_type in SET_SIM_MEASURES, sim_measure_type
-        self.tokenizer = tokenizer
-        self.sim_measure_type = sim_measure_type
-        self.threshold = threshold
-        self.allow_empty = allow_empty
-        self.allow_missing = allow_missing
+class SizeFilter(SetSimFilter):
+    def _drop_ordered(self, lo, ro) -> bool:
+        return self._size_out(len(lo), len(ro))
 
-    def filter_pair(self, l_string, r_string) -> bool:
-        if l_string is None or r_string is None:
-            return not self.allow_missing
-        tok = self._coerced_tokenizer()
-        s1, s2 = len(tok.tokenize(l_string)), len(tok.tokenize(r_string))
-        if s1 == 0 and s2 == 0:
-            return not self.allow_empty
-        lo = size_lower_bound_py(s1, self.sim_measure_type, self.threshold)
-        hi = size_upper_bound_py(s1, self.sim_measure_type, self.threshold)
-        return not (lo <= s2 <= hi)
-
-    def _survivor_pairs(self, prep_l, prep_r, ranks) -> DataFrame:
+    def _nonempty_pairs(self, prep_l, prep_r, ranks) -> DataFrame:
         sl = prep_l.select(F.col("size").alias("l_size")).distinct()
         sr = prep_r.select(F.col("size").alias("r_size")).distinct()
         lo, hi = size_bounds_expr(F.col("l_size"), self.sim_measure_type, self.threshold)
@@ -56,13 +26,8 @@ class SizeFilter(Filter):
         )
         l_ids = prep_l.select(F.col("id").alias("l_id"), F.col("size").alias("l_size"))
         r_ids = prep_r.select(F.col("id").alias("r_id"), F.col("size").alias("r_size"))
-        pairs = (
+        return (
             l_ids.join(F.broadcast(admissible), "l_size")
             .join(r_ids, "r_size")
             .select("l_id", "r_id")
         )
-        if self.allow_empty:
-            el = prep_l.where(F.col("size") == 0).select(F.col("id").alias("l_id"))
-            er = prep_r.where(F.col("size") == 0).select(F.col("id").alias("r_id"))
-            pairs = pairs.unionByName(el.crossJoin(er))
-        return pairs

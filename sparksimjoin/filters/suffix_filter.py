@@ -13,9 +13,11 @@ prefixes); this prunes slightly less than the reference's
 probe-context bound but can never drop a qualifying pair
 (property-tested in tests/test_filters.py).
 
-Table mode scores candidates from the prefix join through an
-Arrow-batched pandas UDF over the pair's ordered token arrays — the
-only filter whose pair predicate is not a Column expression.
+Table mode takes its candidates from the salted, pinned prefix join
+every blocked funnel runs (``joins/core.blocked_pairs``, as
+PrefixFilter does) and scores them through an Arrow-batched pandas
+UDF over the pair's ordered token arrays — the only filter whose pair
+predicate is not a Column expression.
 """
 
 from __future__ import annotations
@@ -27,14 +29,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..filter_math import (
-    SET_SIM_MEASURES,
-    overlap_threshold_py,
-    prefix_length_py,
-)
-from ..joins.core import prefix_explode
-from ..tokenizers import Tokenizer
-from .base import Filter
+from ..filter_math import overlap_threshold_py, prefix_length_py
+from ..joins.core import blocked_pairs
+from .base import SetSimFilter
 
 MAX_DEPTH = 2
 
@@ -76,43 +73,17 @@ def _suffix_drop(
     return h > hmax
 
 
-class SuffixFilter(Filter):
-    def __init__(
-        self,
-        tokenizer: Tokenizer,
-        sim_measure_type: str,
-        threshold: float,
-        allow_empty: bool = True,
-        allow_missing: bool = False,
-    ):
-        assert sim_measure_type in SET_SIM_MEASURES, sim_measure_type
-        self.tokenizer = tokenizer
-        self.sim_measure_type = sim_measure_type
-        self.threshold = threshold
-        self.allow_empty = allow_empty
-        self.allow_missing = allow_missing
+class SuffixFilter(SetSimFilter):
+    def _drop_ordered(self, lo, ro) -> bool:
+        return _suffix_drop(lo, ro, self.sim_measure_type, self.threshold)
 
-    def filter_pair(self, l_string, r_string) -> bool:
-        if l_string is None or r_string is None:
-            return not self.allow_missing
-        tok = self._coerced_tokenizer()
-        lt, rt = tok.tokenize(l_string), tok.tokenize(r_string)
-        if len(lt) == 0 and len(rt) == 0:
-            return not self.allow_empty
-        from collections import Counter
-
-        cnt = Counter(lt) + Counter(rt)
-        lo_ = sorted(lt, key=lambda t: (cnt[t], t))
-        ro_ = sorted(rt, key=lambda t: (cnt[t], t))
-        return _suffix_drop(lo_, ro_, self.sim_measure_type, self.threshold)
-
-    def _survivor_pairs(self, prep_l, prep_r, ranks) -> DataFrame:
-        ex_l = prefix_explode(prep_l, "l", self.sim_measure_type, self.threshold)
-        ex_r = prefix_explode(prep_r, "r", self.sim_measure_type, self.threshold)
-        # the explode/candidate hop runs on iid surrogate longs; the
-        # prep joins below (needed anyway for the token arrays) decode
-        # back to original ids for free
-        cand = ex_l.join(ex_r, "token").select("l_id", "r_id").distinct()
+    def _nonempty_pairs(self, prep_l, prep_r, ranks) -> DataFrame:
+        # the candidate hop runs on iid surrogate longs; the prep joins
+        # below (needed anyway for the token arrays) decode back to
+        # original ids for free
+        cand = blocked_pairs(
+            *self._prefix_postings(prep_l, prep_r, ranks, id_col="iid"), F.lit(True)
+        )
         joined = (
             cand.join(
                 prep_l.select(F.col("iid").alias("l_id"),
@@ -138,11 +109,6 @@ class SuffixFilter(Filter):
                 ]
             )
 
-        pairs = joined.where(keep(F.col("_lt"), F.col("_rt"))).select(
+        return joined.where(keep(F.col("_lt"), F.col("_rt"))).select(
             F.col("_lo").alias("l_id"), F.col("_ro").alias("r_id")
         )
-        if self.allow_empty:
-            el = prep_l.where(F.col("size") == 0).select(F.col("id").alias("l_id"))
-            er = prep_r.where(F.col("size") == 0).select(F.col("id").alias("r_id"))
-            pairs = pairs.unionByName(el.crossJoin(er))
-        return pairs

@@ -763,6 +763,18 @@ DENSE_MEETING_FACTOR = 2
 DENSE_MEET_COST_RATIO = 6
 
 
+class MeetingVolume(int):
+    """The ordered meeting volume of :func:`prefix_meeting_estimate`
+    (the int value; the dense gate compares it with ``n_l * n_r``),
+    carrying ``pairs``: the meetings between distinct records counted
+    once per unordered pair. That is sum c(c-1)/2 on a self-join probe
+    (``estimate_join_cost(self_join=True).est_candidates``, what a
+    self-join's budget is checked against) and the ordered volume
+    itself otherwise."""
+
+    pairs: int
+
+
 def prefix_meeting_estimate(ex_l: DataFrame, ex_r: DataFrame,
                             same: bool = False) -> int:
     """EXACT meeting volume of the blocked candidate equi-join
@@ -771,14 +783,21 @@ def prefix_meeting_estimate(ex_l: DataFrame, ex_r: DataFrame,
     vocabulary-sized aggregation over the already-built exploded
     prefix frames — the same runtime-statistics spirit as AQE, priced
     at one linear pass of (cached) prep per side. ``same=True``
-    (self-join) computes one posting histogram and squares it."""
+    (self-join) computes one posting histogram and squares it; the
+    same aggregate also sums c(c-1)/2 (exact integer math, as
+    estimate.py) into :attr:`MeetingVolume.pairs`."""
     pl = ex_l.groupBy("token").agg(F.count(F.lit(1)).alias("_pl"))
     if same:
-        row = pl.agg(F.sum(F.col("_pl") * F.col("_pl"))).first()
+        row = pl.agg(
+            F.sum(F.col("_pl") * F.col("_pl")),
+            F.sum(F.expr("_pl * (_pl - 1) DIV 2")),
+        ).first()
     else:
         pr = ex_r.groupBy("token").agg(F.count(F.lit(1)).alias("_pr"))
         row = pl.join(pr, "token").agg(F.sum(F.col("_pl") * F.col("_pr"))).first()
-    return int(row[0] or 0)
+    vol = MeetingVolume(row[0] or 0)
+    vol.pairs = int(row[-1] or 0)
+    return vol
 
 
 def dense_band_pair_stats(
@@ -792,8 +811,9 @@ def dense_band_pair_stats(
     the count is exact by construction; the histograms have at most
     one row per distinct set size (bounded by record length, not
     corpus size), so the non-equi histogram join is trivially small.
-    Unoriented (self-join pairs counted both ways), matching
-    :func:`prefix_meeting_estimate`'s convention."""
+    The band volume and the mean(s) are scalar aggregates cross-joined
+    into one row: one job. Unoriented (self-join pairs counted both
+    ways), matching :func:`prefix_meeting_estimate`'s convention."""
     hl = (
         prep_l.where(F.col("size") > 0)
         .groupBy("size").agg(F.count(F.lit(1)).alias("_c"))
@@ -803,20 +823,18 @@ def dense_band_pair_stats(
         .groupBy("size").agg(F.count(F.lit(1)).alias("_c"))
     )
     lo, hi = size_bounds_expr(F.col("s1"), measure, threshold)
-    bp_row = (
+    mean_expr = (F.sum(F.col("size") * F.col("_c")) / F.sum("_c"))
+    bp = (
         hl.select(F.col("size").alias("s1"), F.col("_c").alias("c1"))
         .join(
             hr.select(F.col("size").alias("s2"), F.col("_c").alias("c2")),
             F.col("s2").between(lo, hi),
         )
         .agg(F.sum(F.col("c1") * F.col("c2")))
-        .first()
     )
-    mean_expr = (F.sum(F.col("size") * F.col("_c")) / F.sum("_c"))
-    lbar = hl.agg(mean_expr).first()[0] or 0.0
-    if not same:
-        lbar = max(lbar, hr.agg(mean_expr).first()[0] or 0.0)
-    return int(bp_row[0] or 0), float(lbar)
+    means = [hl.agg(mean_expr)] + ([] if same else [hr.agg(mean_expr)])
+    row = reduce(DataFrame.crossJoin, means, bp).first()
+    return int(row[0] or 0), float(max(m or 0.0 for m in row[1:]))
 
 
 def plan_candidates(
@@ -826,6 +844,7 @@ def plan_candidates(
     ex_r: DataFrame,
     *,
     same: bool,
+    self_join: bool = False,
     allow_dense: bool = True,
     band_stats=None,
     budget: int | None = None,
@@ -866,16 +885,21 @@ def plan_candidates(
     ``budget`` (``candidate_budget``): the pre-flight guard against a
     runaway blocked join. ``est`` is computed before anything
     pairwise runs, and a breach raises ValueError with the projected
-    volume; the gate then reuses the same ``est``."""
+    volume; the gate then reuses the same ``est``. A ``self_join``
+    checks the budget against the unordered volume
+    (:attr:`MeetingVolume.pairs`), the number
+    ``estimate_join_cost(self_join=True)`` reports; the gate still
+    compares the ordered ``est`` with ``n_l * n_r``."""
     n_l = n_r = est = bp = lbar = None
     use_dense = False
     if budget is not None:
         if budget <= 0:
             raise ValueError(f"candidate_budget must be > 0, got {budget}")
         est = prefix_meeting_estimate(ex_l, ex_r, same=same)
-        if est > budget:
+        vol = est.pairs if self_join else est
+        if vol > budget:
             raise ValueError(
-                f"projected candidate meeting volume {est:,} exceeds "
+                f"projected candidate meeting volume {vol:,} exceeds "
                 f"candidate_budget {budget:,}. Price a lossy stop-token cap "
                 "first: estimate_join_cost(..., stop_token_cap=N) reports the "
                 "exact capped volume, a sound lost-pair upper bound, and the "
@@ -1024,37 +1048,51 @@ def apply_salt(
     return ex_l, ex_r, ["token", "salt"]
 
 
-def blocked_pairs(
-    ex_l: DataFrame, ex_r: DataFrame, salt_map: DataFrame | None, cond: Column
+def meeting_join(
+    ex_l: DataFrame, ex_r: DataFrame, salt_map: DataFrame | None
 ) -> DataFrame:
-    """The salted, pinned blocked candidate join: equi-join the exploded
-    prefixes on token (+ salt, :func:`apply_salt`), keep rows passing
-    ``cond``, project distinct (l_id, r_id).
+    """The salted, pinned meeting join of every blocked funnel: salt
+    the two keyed frames (:func:`apply_salt`), pin both sides with an
+    explicit numbered repartition on the join keys, equi-join. One
+    row per meeting (l row, r row, shared key).
 
-    The join inputs are explicitly repartitioned to the session
-    parallelism: exploded prefix rows are NARROW (tens of bytes), so
-    AQE's byte-based coalescing collapses the planner-inserted join
-    exchanges to a handful of tasks — and the join's OUTPUT expansion
-    (posting-list × posting-list, often 10x+ the input bytes) plus the
-    residual predicates and map-side pair dedup then run nearly
-    serially. An explicit numbered repartition on the join keys is
-    reused by EnsureRequirements and is exempt from AQE coalescing
-    (REPARTITION_BY_NUM), keeping the expansion at full parallelism —
-    observed as the candidates stage pinning at ~45s regardless of
-    8 vs 32 cores before this; on the tfidf bench query a 2-task
-    27 exec-s candidate stage was ~13 s of its 22 s, and on the
-    weighted one a 1-task 12.6 exec-s stage was ~12 s of its 15 s.
-
-    distinct() keeps its planner shape: the partial (map-side) dedup
-    runs inside the join stage at the parallelism fixed above, and
-    the final agg over already-deduped pairs is cheap even when AQE
-    coalesces it; CPU-heavy consumers (verify, levenshtein) re-spread
-    explicitly on the pair key themselves."""
+    The pin keeps the join at the session parallelism: exploded
+    prefix rows are NARROW (tens of bytes), so AQE's byte-based
+    coalescing collapses the planner-inserted join exchanges to a
+    handful of tasks — and the join's OUTPUT expansion
+    (posting-list × posting-list, often 10x+ the input bytes) plus
+    whatever runs on it then run nearly serially. An explicit numbered
+    repartition on the join keys is reused by EnsureRequirements and
+    is exempt from AQE coalescing (REPARTITION_BY_NUM), keeping the
+    expansion at full parallelism — observed as the candidates stage
+    pinning at ~45s regardless of 8 vs 32 cores before this; on the
+    tfidf bench query a 2-task 27 exec-s candidate stage was ~13 s of
+    its 22 s, and on the weighted one a 1-task 12.6 exec-s stage was
+    ~12 s of its 15 s. The pin also opts out of AQE's skew-join
+    splitting, which is why the salt is mandatory
+    (:data:`AUTO_SALT_CAP`)."""
     n_part = int(ex_l.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     ex_l, ex_r, join_keys = apply_salt(ex_l, ex_r, salt_map)
     return (
         ex_l.repartition(n_part, *join_keys)
         .join(ex_r.repartition(n_part, *join_keys), join_keys)
+    )
+
+
+def blocked_pairs(
+    ex_l: DataFrame, ex_r: DataFrame, salt_map: DataFrame | None, cond: Column
+) -> DataFrame:
+    """The blocked candidate join: :func:`meeting_join` of the exploded
+    prefixes on token (+ salt), keep rows passing ``cond``, project
+    distinct (l_id, r_id).
+
+    distinct() keeps its planner shape: the partial (map-side) dedup
+    runs inside the join stage at the parallelism the meeting join
+    pins, and the final agg over already-deduped pairs is cheap even
+    when AQE coalesces it; CPU-heavy consumers (verify, levenshtein)
+    re-spread explicitly on the pair key themselves."""
+    return (
+        meeting_join(ex_l, ex_r, salt_map)
         .where(cond)
         .select("l_id", "r_id")
         .distinct()

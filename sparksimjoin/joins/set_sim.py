@@ -97,9 +97,11 @@ def set_sim_join(
     before any pairwise work, and a breach raises ValueError carrying
     the projected volume plus the cap-advisor workflow
     (estimate_join_cost's stop_token_cap pricing) instead of
-    launching a runaway join. None (default) = off. The dense-path
-    gate reuses the same probe, so a budget adds a job only when the
-    gate would not have probed.
+    launching a runaway join. None (default) = off. The volume is the
+    one ``estimate_join_cost`` reports as ``est_candidates`` (once per
+    unordered pair under ``self_join``). The dense-path gate reuses
+    the same probe, so a budget adds a job only when the gate would
+    not have probed.
 
     ``metrics_out["candidate_plan"]`` records the candidate-path
     decision (joins/core.plan_candidates): path, n_l, n_r, est, bp,
@@ -155,7 +157,7 @@ def set_sim_join(
     # volume prices the marginal window
     same = prep_r is prep_l
     use_dense, plan = plan_candidates(
-        prep_l, prep_r, ex_l, ex_r, same=same,
+        prep_l, prep_r, ex_l, ex_r, same=same, self_join=self_join,
         allow_dense=stop_token_cap is None and comp_op in (">=", ">"),
         band_stats=lambda: dense_band_pair_stats(
             prep_l, prep_r, measure, threshold, same=same),

@@ -40,7 +40,7 @@ from pyspark.sql.types import LongType
 
 from .cache import scoped_caches
 from .checkpoint import CheckpointManager
-from .clustering import CCStats, connected_components
+from .clustering import connected_components
 from .filter_math import JACCARD
 from .joins.core import (
     build_salt_map,
@@ -482,7 +482,6 @@ def _run_stages(
                                  extra=params["scored"])
 
     def _clusters() -> DataFrame:
-        stats = CCStats()
         round_ckpt = cc_round_hook(cfg, ckpt)
         if "l_iid" in scored.columns:
             # iid-space contraction: every star round (and its durable
@@ -494,7 +493,7 @@ def _run_stages(
             # order contract; tests/test_pipeline.py asserts equality).
             comp_iid = connected_components(
                 scored, "l_iid", "r_iid", max_rounds=cfg.max_cc_rounds,
-                round_checkpoint=round_ckpt, stats=stats,
+                round_checkpoint=round_ckpt,
             )
             idmap = tokens.select(F.col("iid").alias("id"), F.col("id").alias("_conv"))
             decoded = comp_iid.join(idmap, "id").select("_conv", "component")
@@ -507,7 +506,7 @@ def _run_stages(
             # original ids directly, as before
             comp = connected_components(
                 scored, "l_id", "r_id", max_rounds=cfg.max_cc_rounds,
-                round_checkpoint=round_ckpt, stats=stats,
+                round_checkpoint=round_ckpt,
             )
         return label_components(records.select(F.col("conv_id")), comp)
 

@@ -347,12 +347,18 @@ def test_dense_not_used_for_lossy_or_nonmonotone(spark):
 def test_candidate_budget_guard(spark, monkeypatch):
     """candidate_budget: a breached budget must refuse to launch with
     the projected volume in the error, also when the dense gate never
-    probes (cap 0); a generous budget must not change the result, and
-    the gate reuses the budget's meeting estimate (one probe)."""
+    probes (cap 0); a budget of exactly the self-join volume
+    ``estimate_join_cost`` reports must run and not change the result,
+    one less must raise, and the gate reuses the budget's meeting
+    estimate (one probe)."""
     import sparksimjoin.joins.core as core
-    from sparksimjoin import overlap_coefficient_join
+    from sparksimjoin import estimate_join_cost, overlap_coefficient_join
 
     corpus = _dense_corpus(spark)
+    est = estimate_join_cost(
+        corpus, corpus, "id", "id", "text", "text", WS, "OVERLAP_COEFFICIENT", 0.6,
+        self_join=True,
+    ).first()["est_candidates"]
     with pytest.raises(ValueError, match="candidate meeting volume"):
         overlap_coefficient_join(
             corpus, corpus, "id", "id", "text", "text", WS, 0.6,
@@ -380,7 +386,7 @@ def test_candidate_budget_guard(spark, monkeypatch):
         ok = overlap_coefficient_join(
             corpus, corpus, "id", "id", "text", "text", WS, 0.6,
             self_join=True, dedup_strings=False, allow_empty=False,
-            candidate_budget=10**12,
+            candidate_budget=est,
         )
     assert len(calls) == 1, calls
     base = overlap_coefficient_join(
@@ -390,3 +396,9 @@ def test_candidate_budget_guard(spark, monkeypatch):
     assert _pairs(ok.select("l_id", "r_id", "_sim_score")) == _pairs(
         base.select("l_id", "r_id", "_sim_score")
     )
+    with pytest.raises(ValueError, match=f"candidate meeting volume {est:,} "):
+        overlap_coefficient_join(
+            corpus, corpus, "id", "id", "text", "text", WS, 0.6,
+            self_join=True, dedup_strings=False, allow_empty=False,
+            candidate_budget=est - 1,
+        )

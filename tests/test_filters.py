@@ -196,8 +196,8 @@ def test_series_to_str():
 
 # ------------------------------------------------- salted table modes
 def test_filters_salted_equals_unsalted(spark, monkeypatch):
-    """PrefixFilter/OverlapFilter table modes now salt hot tokens
-    (round-3 verdict: a bare equi-join on one ubiquitous token
+    """Every filter table mode that meets on tokens runs the joins'
+    salted meeting join (a bare equi-join on one ubiquitous token
     serializes the stage at scale). Salting must not change the
     survivor set: the left row of a hot token meets each right row
     exactly once (l's salt bucket), so distinct()/the per-pair
@@ -217,6 +217,8 @@ def test_filters_salted_equals_unsalted(spark, monkeypatch):
     for cls, kw in [
         (PrefixFilter, dict(tokenizer=WS, sim_measure_type="JACCARD", threshold=0.3)),
         (OverlapFilter, dict(tokenizer=WS, overlap_size=2)),
+        (SuffixFilter, dict(tokenizer=WS, sim_measure_type="JACCARD", threshold=0.3)),
+        (PositionFilter, dict(tokenizer=WS, sim_measure_type="JACCARD", threshold=0.3)),
     ]:
         monkeypatch.setattr(core, "AUTO_SALT_CAP", 10**9)  # no token is hot
         unsalted = run(cls, **kw)
